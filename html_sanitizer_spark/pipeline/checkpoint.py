@@ -45,7 +45,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..configs import settings_for
-from .job import explode_spans, lineage_metrics, reassemble_spans, sanitize_exploded
+from .job import (
+    explode_spans,
+    lineage_metrics,
+    reassemble_spans,
+    salt_partitions,
+    sanitize_exploded,
+)
 
 __all__ = ["CheckpointedRun", "run_checkpointed"]
 
@@ -170,7 +176,7 @@ def run_checkpointed(
     out_dir: str,
     settings=None,
     n_buckets: int = 8,
-    salt_buckets: int = 32,
+    salt_buckets: int | str = "auto",
     fail_after_bucket: int | None = None,
     table_format: str = "dirs",
     on_error: str = "raise",
@@ -182,6 +188,10 @@ def run_checkpointed(
     "iceberg-lite" appends each bucket as a snapshot of an
     :class:`IcebergLiteTable` (production: a real Iceberg append), keeping
     the resume manifest as the source of truth for which buckets committed.
+    ``salt_buckets="auto"`` sizes each bucket's salted shuffle with
+    :func:`~.job.salt_partitions` on that bucket's staged read: one Python
+    task per core, more only when the bucket is larger than one
+    ``maxPartitionBytes`` split per core. Pass an int to pin it.
     ``fail_after_bucket`` is a test hook: raise after committing that many
     buckets to simulate a mid-run crash.
     ``on_error`` != "raise" routes poison spans to an explicit quarantine
@@ -210,7 +220,8 @@ def run_checkpointed(
             # hash bucket received no rows — still emit an (empty) committed
             # output dir so read_checkpointed's bucket=* glob stays uniform
             part = spark.createDataFrame([], df.schema)
-        clean = sanitize_exploded(explode_spans(part), settings_obj, salt_buckets,
+        salt = salt_partitions(part) if salt_buckets == "auto" else salt_buckets
+        clean = sanitize_exploded(explode_spans(part), settings_obj, salt,
                                   on_error=on_error, memoize=memoize)
         clean = clean.persist()
         result = reassemble_spans(clean, two_phase=True)

@@ -3,7 +3,7 @@
     spark-submit --py-files engine.zip -m ...     (cluster)
     python -m html_sanitizer_spark.pipeline.cli \
         --input /data/spans --output /data/clean \
-        --config default --buckets 16 --salt 64 [--resume] [--nested]
+        --config default --buckets 16 [--salt N] [--nested]
 
 Reads a (doc_id, spans) parquet/Iceberg table, sanitizes text spans,
 writes sanitized docs + per-partition lineage + an atomic resume manifest.
@@ -76,8 +76,10 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--config", default="default")
     ap.add_argument("--buckets", type=int, default=16,
                     help="doc_id-hash checkpoint buckets (resume granularity)")
-    ap.add_argument("--salt", type=int, default=64,
-                    help="salt buckets for the sanitize-stage shuffle")
+    ap.add_argument("--salt", type=int, default=None,
+                    help="partitions of the salted sanitize-stage shuffle"
+                         " (default: one per core, more for inputs larger"
+                         " than one maxPartitionBytes split per core)")
     ap.add_argument("--nested", action="store_true",
                     help="zero-reassembly-shuffle plan (no mega-doc skew)")
     ap.add_argument("--no-checkpoint", action="store_true",
@@ -100,6 +102,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--max-link-density", type=float, default=0.5,
                     help="extract mode: atomic-block link-density keep bar")
     args = ap.parse_args(argv)
+    salt = "auto" if args.salt is None else args.salt
 
     settings = settings_for(args.config)  # fail fast on bad config
 
@@ -110,7 +113,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.mode == "extract":
         out = extract_spans(
             spark, df, max_link_density=args.max_link_density,
-            salt_buckets=args.salt,
+            salt_buckets=salt,
         )
         out.write.mode("overwrite").parquet(args.output)
         print(json.dumps({"input": args.input, "output": args.output,
@@ -123,7 +126,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.no_checkpoint or args.nested:
         out = sanitize_spans(
             spark, df, settings=settings,
-            explode=not args.nested, salt_buckets=args.salt,
+            explode=not args.nested, salt_buckets=salt,
             on_error=args.on_error, memoize=args.memoize,
         )
         out.write.mode("overwrite").parquet(args.output)
@@ -131,7 +134,7 @@ def main(argv: list[str] | None = None) -> int:
     else:
         run = run_checkpointed(
             spark, df, args.output, settings=settings,
-            n_buckets=args.buckets, salt_buckets=args.salt,
+            n_buckets=args.buckets, salt_buckets=salt,
             on_error=args.on_error, memoize=args.memoize,
         )
         done = sorted(run.done)

@@ -5,9 +5,11 @@ Exploded path (default — skew-proof):
     read (doc_id, spans)
       -> posexplode_outer(spans)                  [no shuffle: explode is
                                                    pipelined into the scan]
-      -> repartition by (doc_id, pos div 256)     [SHUFFLE 1 — chunk-salted:
-                                                   a mega-doc's chunks spread
-                                                   over all buckets, so no
+      -> repartition by (doc_id, pos div 256)     [SHUFFLE 1 — chunk-salted
+         into P = salt_partitions(input)           (one per core unless the
+                                                   input is large): a
+                                                   mega-doc's chunks spread
+                                                   over all P tasks, so no
                                                    straggler UDF task; <=256
                                                    spans per doc per task]
       -> sanitize_udf on text-kind spans          [the only JVM<->Python
@@ -45,6 +47,7 @@ from ..functions.udfs import (
 )
 
 __all__ = [
+    "salt_partitions",
     "sanitize_spans",
     "extract_spans",
     "explode_spans",
@@ -57,6 +60,50 @@ __all__ = [
 def explode_spans(df: DataFrame) -> DataFrame:
     """(doc_id, spans) -> (doc_id, pos, span); empty docs keep a null row."""
     return df.select("doc_id", F.posexplode_outer("spans").alias("pos", "span"))
+
+
+def _has_exchange(df: DataFrame) -> bool:
+    """Whether ``df``'s physical plan already contains an Exchange."""
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.executedPlan()
+        if "Exchange" in node.nodeName():
+            return True
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return False
+
+
+def salt_partitions(df: DataFrame) -> int:
+    """Partition count P for the salted (doc_id, _chunk) exchange over ``df``.
+
+    Every Python task pays a fixed worker-side cost whatever its size
+    (about 0.2 s of worker CPU per task on a 4-CPU host, mostly PySpark's
+    per-task ``importlib.invalidate_caches()``), so the salted stage runs
+    the fewest tasks that keep every core busy:
+    P = max(defaultParallelism, ceil(input bytes / maxPartitionBytes)).
+    The second term is the number of splits Spark's file scan makes once
+    the input outgrows one split per core, so P grows with the input
+    while a mega-document's <=256-span chunks still spread over all P
+    tasks.
+
+    Pure metadata, never a Spark job or an RDD conversion: the input
+    bytes are the optimized plan's leaf statistics (file sizes after
+    partition pruning). A frame that already shuffles, or has a leaf of
+    unknown size, gets defaultParallelism.
+    """
+    spark = df.sparkSession
+    dp = spark.sparkContext.defaultParallelism
+    if _has_exchange(df):
+        return dp
+    conf = spark._jsparkSession.sessionState().conf()
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    sizes = [leaves.apply(i).stats().sizeInBytes() for i in range(leaves.size())]
+    if any(s >= conf.defaultSizeInBytes() for s in sizes):
+        return dp
+    return max(dp, -(-sum(sizes) // conf.filesMaxPartitionBytes()))
 
 
 def sanitize_exploded(
@@ -226,18 +273,16 @@ def sanitize_spans(
 ) -> DataFrame:
     """End-to-end: sanitize every text-kind span of (doc_id, spans).
 
-    ``salt_buckets="auto"`` sizes the salted shuffle to 4x the cluster's
-    default parallelism — enough granularity that AQE can rebalance and a
-    mega-document never owns a task, without drowning small jobs in tiny
-    tasks. Pass an int to pin it, or None to skip salting entirely.
+    ``salt_buckets="auto"`` sizes the salted shuffle with
+    :func:`salt_partitions`: one Python task per core, more only when the
+    input is larger than one ``maxPartitionBytes`` split per core. Pass an
+    int to pin it, or None to skip salting entirely.
     ``memoize``: per-worker output cache size for boilerplate-heavy
     corpora (see make_sanitize_udf).
     ``max_spans_hint``: known max span count per doc (table statistics /
     previous lineage); lets ``explode="auto"`` skip even the bounded probe.
     ``nested_impl``: "arrow" (mapInArrow, column-wise batch rebuild) or
     "pandas" (span-array pandas UDF) for the non-exploded plan."""
-    if salt_buckets == "auto":
-        salt_buckets = spark.sparkContext.defaultParallelism * 4
     if explode == "auto":
         # pick the physical plan by measured skew: if any document's span
         # count could monopolize a task, use the exploded+salted plan;
@@ -254,6 +299,8 @@ def sanitize_spans(
         udf = make_span_array_udf(settings, memoize=memoize,
                                   on_error=on_error)
         return df.select("doc_id", udf("spans").alias("spans"))
+    if salt_buckets == "auto":
+        salt_buckets = salt_partitions(df)
     clean = sanitize_exploded(explode_spans(df), settings, salt_buckets,
                               memoize=memoize, on_error=on_error)
     return reassemble_spans(clean, two_phase=two_phase)
@@ -270,7 +317,7 @@ def extract_spans(
     """Main-content extraction over interleaved (doc_id, spans) documents —
     the north rule's "main-content extraction pipeline" run on the SAME
     topology as the sanitize flagship: explode -> salted shuffle on
-    (doc_id, pos) -> ONE Arrow-batched Python hop (engine/extract.py:
+    (doc_id, pos div 256) into :func:`salt_partitions` tasks -> ONE Arrow-batched Python hop (engine/extract.py:
     boilerplate kill list + atomic-block link density) applied to
     text-kind spans only -> two-phase chunked reassembly. Media-kind
     spans pass through byte-identical and in position; the span order
@@ -279,7 +326,7 @@ def extract_spans(
     from ..functions.udfs import make_extract_udf
 
     if salt_buckets == "auto":
-        salt_buckets = spark.sparkContext.defaultParallelism * 4
+        salt_buckets = salt_partitions(df)
     exploded = explode_spans(df)
     salted = False
     if salt_buckets:

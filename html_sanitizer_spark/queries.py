@@ -1873,7 +1873,7 @@ def q_sanitize_structure(spark, sf_dir):
     all oracle-checkable because sanitize never touches them."""
     from .pipeline.job import sanitize_spans
 
-    out = sanitize_spans(spark, spans_from_documents(spark, sf_dir), salt_buckets=8)
+    out = sanitize_spans(spark, spans_from_documents(spark, sf_dir))
     return out.select(
         "doc_id",
         F.size("spans").alias("n_spans"),
@@ -1905,7 +1905,7 @@ def q_sanitize_text(spark, sf_dir):
     text-level correctness is pinned by the 112-pair golden replay)."""
     from .pipeline.job import sanitize_spans
 
-    out = sanitize_spans(spark, spans_from_documents(spark, sf_dir), salt_buckets=8)
+    out = sanitize_spans(spark, spans_from_documents(spark, sf_dir))
     return out.select(
         "doc_id",
         F.element_at(F.col("spans"), 2)["text"].alias("clean_html"),
@@ -1958,7 +1958,7 @@ def q_sanitize_text_plain(spark, sf_dir):
             )
         ).alias("spans"),
     )
-    out = sanitize_spans(spark, spans, salt_buckets=8)
+    out = sanitize_spans(spark, spans)
     return out.select(
         "doc_id", F.element_at("spans", 1)["text"].alias("clean_p")
     )
@@ -2014,7 +2014,7 @@ def q_training_pipeline(spark, sf_dir):
             )
         ).alias("spans"),
     )
-    out = sanitize_spans(spark, spans, salt_buckets=8)
+    out = sanitize_spans(spark, spans)
     return (
         out.select(
             F.count(F.lit(1)).alias("n_clean_docs"),

@@ -957,3 +957,49 @@ def test_simhash_kernel_matches_expression_form(spark):
     }
     assert got == expected
     assert set(got) == {0, 1, 5, 6, 7, 8}  # 2/3/4 dropped on both paths
+
+
+def _simhash_reference(text):
+    """SimHash-64 from per-nibble value counts, in plain Python ints: for
+    bit b, a token votes +1 when bit (b % 4) of md5 hex nibble (b // 4)
+    is set and -1 otherwise; a positive vote sets the bit, read as a
+    signed 64-bit value. None when the text has no tokens."""
+    import hashlib
+
+    toks = [t for t in (text or "").split(" ") if t]
+    if not toks:
+        return None
+    counts = [dict.fromkeys("0123456789abcdef", 0) for _ in range(16)]
+    for t in toks:
+        for n, ch in enumerate(hashlib.md5(t.encode()).hexdigest()[:16]):
+            counts[n][ch] += 1
+    sim = 0
+    for b in range(64):
+        vote = sum(c if (int(ch, 16) >> (b % 4)) & 1 else -c
+                   for ch, c in counts[b // 4].items())
+        if vote > 0:
+            sim |= 1 << b
+    return sim - (1 << 64) if sim >> 63 else sim
+
+
+def test_simhash_kernel_matches_reference_on_multi_mb_doc():
+    """The numpy vote reduction over a multi-MB non-ASCII document (tens
+    of thousands of tokens in one reduceat segment, run-length spacing)
+    and across the segment boundaries of a mixed batch, against the
+    plain-Python reference."""
+    from html_sanitizer_spark.functions.fingerprint import (
+        simhash64_batch,
+        simhash64_py,
+    )
+
+    words = ["único", "tokén", "漢字漢字", "ünïcode", "Ωμέγα", "дом", "🙂"]
+    big = "  ".join(
+        f"{words[i % len(words)] * 3}{i % 4099}" for i in range(80_000)
+    )
+    assert len(big.encode()) > 2_000_000
+    assert simhash64_py(big) == _simhash_reference(big)
+
+    batch = ["hello world hello", big, "", None, "  ", "a b a b", "x"]
+    kept, sims = simhash64_batch(batch)
+    assert kept == [0, 1, 5, 6]
+    assert sims == [_simhash_reference(batch[i]) for i in kept]

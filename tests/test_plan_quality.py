@@ -5,6 +5,10 @@ whole-stage codegen on the JVM-side operators."""
 
 from __future__ import annotations
 
+import os
+import re
+from contextlib import contextmanager
+
 from pyspark.sql import functions as F
 
 from html_sanitizer_spark.pipeline.job import explode_spans, sanitize_exploded
@@ -119,6 +123,142 @@ def test_exploded_pipeline_exchange_budget(spark):
     assert plan.count("Exchange hashpartitioning") <= 3, plan
     # the salt exchange and the phase-1 aggregate share the same key pair
     assert "_chunk" in plan, plan
+
+
+_SALT_KEY = re.compile(
+    r"hashpartitioning\(doc_id#\d+L?, _chunk#\d+L?, (\d+)\), REPARTITION_BY_NUM"
+)
+
+
+def _salt_counts(plan: str) -> list[int]:
+    return [int(n) for n in _SALT_KEY.findall(plan)]
+
+
+def _bytes_of(df) -> int:
+    return sum(os.path.getsize(f.removeprefix("file:")) for f in df.inputFiles())
+
+
+def _spans_parquet(spark, path: str, n_docs: int = 300):
+    from html_sanitizer_spark.pipeline.synth import synth_spans_df
+
+    synth_spans_df(spark, n_docs, seed=5, mega_every=0, text_repeat=5).write.mode(
+        "overwrite").parquet(path)
+    return spark.read.parquet(path)
+
+
+@contextmanager
+def _max_partition_bytes(spark, n: int):
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield n
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_default_salt_is_one_task_per_core_on_small_input(spark, tmp_path):
+    """With the default salt, a small input's salted exchange has exactly
+    defaultParallelism partitions (one Python task per core), and an
+    explicit int still wins."""
+    from html_sanitizer_spark.pipeline.job import salt_partitions, sanitize_spans
+
+    df = _spans_parquet(spark, str(tmp_path / "docs"))
+    dp = spark.sparkContext.defaultParallelism
+    assert salt_partitions(df) == dp
+    assert _salt_counts(_plan(sanitize_spans(spark, df, explode=True))) == [dp]
+    assert _salt_counts(_plan(sanitize_spans(spark, df, explode=True,
+                                             salt_buckets=7))) == [7]
+
+
+def test_default_salt_grows_with_file_scan_splits(spark, tmp_path):
+    """Once the input is larger than one maxPartitionBytes split per core,
+    P = ceil(input bytes / maxPartitionBytes): the split count of the
+    file scan, and never more than it."""
+    from html_sanitizer_spark.pipeline.job import salt_partitions, sanitize_spans
+
+    df = _spans_parquet(spark, str(tmp_path / "docs"))
+    nbytes = _bytes_of(df)
+    dp = spark.sparkContext.defaultParallelism
+    with _max_partition_bytes(spark, nbytes // (3 * dp)) as mpb:
+        want = -(-nbytes // mpb)
+        assert want > dp
+        assert salt_partitions(df) == want
+        assert want <= df.rdd.getNumPartitions()
+        plan = _plan(sanitize_spans(spark, df, explode=True))
+    assert _salt_counts(plan) == [want], plan
+
+
+def test_checkpointed_bucket_salt_follows_the_rule(spark, tmp_path, monkeypatch):
+    """run_checkpointed sizes every bucket's salted exchange from that
+    bucket's staged read; an explicit int still wins."""
+    from html_sanitizer_spark.pipeline import checkpoint
+
+    df = _spans_parquet(spark, str(tmp_path / "docs"))
+    seen = []
+    real = checkpoint.sanitize_exploded
+
+    def spy(exploded, settings, salt, **kw):
+        out = real(exploded, settings, salt, **kw)
+        seen.append((_bytes_of(exploded), salt, _salt_counts(_plan(out))))
+        return out
+
+    monkeypatch.setattr(checkpoint, "sanitize_exploded", spy)
+    dp = spark.sparkContext.defaultParallelism
+    with _max_partition_bytes(spark, _bytes_of(df) // (4 * dp)) as mpb:
+        checkpoint.run_checkpointed(spark, df, str(tmp_path / "auto"),
+                                    n_buckets=2)
+    assert len(seen) == 2
+    for nbytes, salt, counts in seen:
+        assert salt == max(dp, -(-nbytes // mpb)) > dp
+        assert counts == [salt]
+    seen.clear()
+    checkpoint.run_checkpointed(spark, df, str(tmp_path / "pinned"),
+                                n_buckets=2, salt_buckets=7)
+    assert [(salt, counts) for _, salt, counts in seen] == [(7, [7])] * 2
+
+
+def test_salt_sizing_launches_no_job(spark, tmp_path):
+    """Computing P is metadata only: no Spark job on a plain scan, nor on
+    a frame with a groupBy upstream, where counting the frame's
+    partitions (the positive control) would run its shuffle."""
+    from html_sanitizer_spark.pipeline.job import salt_partitions
+
+    df = _spans_parquet(spark, str(tmp_path / "docs"))
+    grouped = df.groupBy("doc_id").agg(F.first("spans").alias("spans"))
+    sc = spark.sparkContext
+    sc.setJobGroup("salt-sizing", "salt_partitions must not run jobs")
+    try:
+        salt_partitions(df)
+        assert salt_partitions(grouped) == sc.defaultParallelism
+        assert list(sc.statusTracker().getJobIdsForGroup("salt-sizing")) == []
+        grouped.rdd.getNumPartitions()
+        assert list(sc.statusTracker().getJobIdsForGroup("salt-sizing"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_megadoc_chunks_reach_every_salted_partition(spark):
+    """At the default (smaller) P, a 10k-span mega-document's 256-span
+    chunks still land in every one of the P salted partitions."""
+    import pandas as pd
+
+    from html_sanitizer_spark.pipeline.job import salt_partitions
+    from html_sanitizer_spark.pipeline.synth import DOC_SCHEMA
+
+    def gen(batches):
+        for _ in batches:
+            spans = [{"kind": "text", "text": f"<b>s{i}</b>", "media_ref": "",
+                      "offset": i} for i in range(10_000)]
+            yield pd.DataFrame({"doc_id": ["mega"], "spans": [spans]})
+
+    df = spark.range(1).mapInPandas(gen, schema=DOC_SCHEMA)
+    p = salt_partitions(df)
+    clean = sanitize_exploded(explode_spans(df), None, salt_buckets=p)
+    assert _salt_counts(_plan(clean)) == [p]
+    parts = clean.select(F.spark_partition_id().alias("p")).distinct().count()
+    assert parts == p
 
 
 def test_wholestage_codegen_on_jvm_operators(spark):
@@ -264,13 +404,16 @@ def test_no_rdd_conversion_in_query_build(spark, monkeypatch):
     DataFrame to an RDD (the old _spread probe did, forcing a plan
     conversion per query build)."""
     from pyspark.sql import DataFrame
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
     from html_sanitizer_spark.queries import spark_queries
 
     def boom(self):
         raise AssertionError("DataFrame.rdd used in a query build path")
 
-    monkeypatch.setattr(DataFrame, "rdd", property(boom))
+    # the classic (non-Connect) frame overrides ``rdd``: patch both
+    for cls in (DataFrame, ClassicDataFrame):
+        monkeypatch.setattr(cls, "rdd", property(boom))
     for name, fn in spark_queries().items():
         df = fn(spark, SF)
         assert df.columns, name
