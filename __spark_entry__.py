@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: full explode -> salted sanitize -> reassemble pipeline over
+    """Flagship: full chunk -> salted sanitize -> merge pipeline over
     spans synthesized from the sf0.001 documents table."""
     from html_sanitizer_spark.queries import flagship
 

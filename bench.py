@@ -173,7 +173,7 @@ def _one_shot_scaling(sf_dir: str, cpus: int, executors: int | None = None,
     """Subprocess leg: time the salted sanitize pipeline at one parallelism
     level. The synthetic corpus (60k docs incl. mega-docs) is materialized
     to parquet first so the measured job is the real topology — storage
-    scan -> explode -> salted shuffle -> Arrow UDF -> two-phase reassembly —
+    scan -> chunk -> salted shuffle -> Arrow kernel -> per-doc merge —
     with no in-line generation cost. Best-of-3 to damp shared-host noise;
     the sanitize text forced via a length-sum so the UDF can't be pruned.
 
@@ -372,7 +372,7 @@ def run_scaling_executors(sf_dir: str, low_ex: int, high_ex: int,
 def run_big(cpus: int, n_docs: int) -> dict:
     """Sustained-throughput leg at a larger synthetic corpus (the sf
     tables top out at 5k docs): materialize n_docs (Zipf-skewed spans incl.
-    mega-docs) to parquet, run the full exploded pipeline at local[cpus],
+    mega-docs) to parquet, run the full chunked pipeline at local[cpus],
     report docs/sec. Evidence that throughput holds as the corpus grows ~4x
     past the scaling bench's 60k."""
     import tempfile

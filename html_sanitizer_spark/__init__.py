@@ -8,7 +8,7 @@ interleaved text + media span documents.
 Layout:
   engine/     pure-stdlib sanitizer core (no Spark, no lxml)
   functions/  Spark column functions + vectorized pandas/Arrow UDFs
-  pipeline/   batch job topology: explode -> salt -> sanitize -> reassemble,
+  pipeline/   batch job topology: chunk -> salt -> sanitize -> merge,
               lineage, checkpoint/resume, deterministic fixture synthesis
   streaming/  incremental variant (Structured Streaming foreachBatch)
 """

@@ -7,13 +7,14 @@ serialize) runs in a tight loop over the batch, amortizing settings/regex
 setup which lives in module/executor scope. Per-row Python UDFs are never
 used (north_rule requirement).
 
-Two shapes:
-- ``make_sanitize_udf``   — Series[str] -> Series[str], for the exploded
-  span path (scalar pandas_udf; Catalyst sees a deterministic expression).
-- ``make_span_array_udf`` — Series[list[struct]] -> Series[list[struct]],
-  for the nested zero-extra-shuffle path: sanitizes text-kind spans inside
-  the array, passes media spans through byte-identical, preserving order
-  trivially.
+Shapes:
+- ``sanitize_spans_arrow`` — the ``mapInArrow`` span-array kernel of both
+  sanitize plans (whole docs, or the chunked plan's <=256-span rows):
+  sanitizes text-kind spans inside the array, passes media spans through
+  byte-identical, preserving order trivially.
+- ``make_span_array_udf`` — the same over a pandas UDF (``nested_impl``).
+- ``make_sanitize_udf``   — Series[str] -> Series[str], for plain string
+  columns (streaming, SQL registration).
 """
 
 from __future__ import annotations
@@ -46,6 +47,9 @@ SPAN_TYPE = T.StructType(
     ]
 )
 SPANS_TYPE = T.ArrayType(SPAN_TYPE)
+
+# spans per chunk row of the chunked sanitize plan (pipeline.job)
+CHUNK_SPANS = 256
 
 # on_error != "raise" result: sanitized text + explicit error flag, so a
 # poison row is visible downstream (quarantine / lineage counters) instead
@@ -84,43 +88,21 @@ def make_sanitize_udf(settings=None, memoize: int = 0, on_error: str = "raise"):
     """
     if on_error not in ("raise", "keep", "null"):
         raise ValueError(f"on_error must be raise|keep|null, got {on_error!r}")
-    settings_obj = settings_for(settings)
+    kernel = _make_text_kernel(settings_for(settings), memoize, on_error)
 
     if on_error != "raise":
-        kernel = _make_text_kernel(settings_obj, memoize, on_error)
 
         @F.pandas_udf(SAFE_RESULT_TYPE)
         def sanitize_batch_safe(texts: pd.Series) -> pd.DataFrame:
-            outs: list = []
-            errs: list = []
-            for t in texts:
-                if t is None:
-                    outs.append(None)
-                    errs.append(False)
-                    continue
-                o, e = kernel(t)
-                outs.append(o)
-                errs.append(e)
-            return pd.DataFrame({"text": outs, "err": errs})
+            res = [(None, False) if t is None else kernel(t) for t in texts]
+            return pd.DataFrame(res, columns=["text", "err"])
 
         return sanitize_batch_safe
-
-    if memoize > 0:
-        kernel = _make_text_kernel(settings_obj, memoize, "raise")
-
-        @F.pandas_udf(T.StringType())
-        def sanitize_batch_memo(texts: pd.Series) -> pd.Series:
-            out = [kernel(t)[0] if t is not None else None for t in texts]
-            return pd.Series(out, dtype="object")
-
-        return sanitize_batch_memo
 
     @F.pandas_udf(T.StringType())
     def sanitize_batch(texts: pd.Series) -> pd.Series:
         # Executor-side: regexes compile lazily once per python worker.
-        out = [
-            sanitize(t, settings_obj) if t is not None else None for t in texts
-        ]
+        out = [None if t is None else kernel(t)[0] for t in texts]
         return pd.Series(out, dtype="object")
 
     return sanitize_batch
@@ -176,8 +158,8 @@ def _worker_cache(memo_key: str) -> dict:
 
 
 def _make_text_kernel(settings_obj, memoize: int, on_error: str):
-    """Per-fragment sanitize kernel shared by every UDF shape (exploded
-    scalar, nested pandas, nested arrow): one place implements the memo
+    """Per-fragment sanitize kernel shared by every UDF shape (scalar,
+    span-array pandas, span-array arrow): one place implements the memo
     (per-worker bounded cache keyed by a deterministic config+policy
     fingerprint, ADVICE r02) and the poison policy (keep/null with an
     explicit error flag, never a silent pass-through). Returns
@@ -218,7 +200,7 @@ def make_span_array_udf(settings=None, memoize: int = 0, on_error: str = "raise"
     Keeps documents intact (no explode, no reassembly shuffle): for each
     row, text-kind spans are sanitized in place, media spans pass through
     untouched, order is preserved by construction. Best plan when the doc
-    size distribution is tame; the exploded+salted path wins under
+    size distribution is tame; the chunked+salted plan wins under
     mega-document skew.
 
     ``memoize``/``on_error`` mirror make_sanitize_udf (VERDICT r03 #8 —
@@ -266,20 +248,28 @@ def make_span_array_udf(settings=None, memoize: int = 0, on_error: str = "raise"
 
 def sanitize_spans_arrow(
     df, settings=None, memoize: int = 0, on_error: str = "raise",
-    with_errors: bool = False,
+    with_errors: bool = False, lineage=None,
 ):
     """Nested zero-extra-shuffle path via ``mapInArrow`` (SURVEY.md §2.10):
     operates on pyarrow RecordBatches directly — the flattened struct
     children are rebuilt column-wise (only the ``text`` child is touched),
     skipping the per-row dict conversion the pandas span-array UDF pays.
     Same semantics as make_span_array_udf; measurably faster per batch.
+    The chunked plan (pipeline.job.sanitize_chunks) runs it on
+    (doc_id, _chunk, spans) rows of at most CHUNK_SPANS spans.
 
     ``memoize``/``on_error`` mirror make_sanitize_udf (VERDICT r03 #8):
     keep/null are applied per span. ``with_errors=True`` (requires a
-    non-"raise" policy) appends an ``n_span_errors`` int column — the
-    per-document poison count, computed from the list offsets — so nested
-    users get the same quarantine/lineage visibility the exploded frame's
-    span_error flag gives (filter n_span_errors > 0 → quarantine table).
+    non-"raise" policy) appends ``span_errors`` array<int>: the 0-based
+    positions of the row's poison spans (null for a null spans row).
+
+    ``lineage`` (pipeline.job.lineage_accumulator): each task with rows
+    adds ``part_id -> (n_spans, n_docs, text_bytes_out, n_media_spans,
+    n_errors)`` for its partition. An empty or null spans row counts as
+    one span; text_bytes_out counts characters, as Spark's ``length``.
+    n_docs is exact: on chunk rows, the ids of rows that may share their
+    doc (``_chunk > 0`` or a full first chunk) go through a set, so its
+    size is bounded by the partition's mega-doc chunks.
     """
     import pyarrow as pa
 
@@ -288,20 +278,19 @@ def sanitize_spans_arrow(
     if with_errors and on_error == "raise":
         raise ValueError(
             "with_errors=True needs on_error='keep' or 'null' — under "
-            "'raise' a poison span fails the job, so the count column "
-            "would be constant zero"
+            "'raise' a poison span fails the job, so the error column "
+            "would be constant empty"
         )
     settings_obj = settings_for(settings)
     kernel = _make_text_kernel(settings_obj, memoize, on_error)
     schema = df.schema
     if with_errors:
-        from pyspark.sql import types as _T
-
-        schema = _T.StructType(
-            schema.fields + [_T.StructField("n_span_errors", _T.IntegerType())]
-        )
+        schema = T.StructType(schema.fields + [
+            T.StructField("span_errors", T.ArrayType(T.IntegerType()))])
 
     def fix_batches(batches):
+        n_spans = n_docs = chars = media = errors = 0
+        shared = set()  # ids of docs that may own several rows here
         for batch in batches:
             names = batch.schema.names
             idx = names.index("spans")
@@ -309,21 +298,24 @@ def sanitize_spans_arrow(
             if isinstance(lst, pa.ChunkedArray):  # defensive; batches are flat
                 lst = lst.combine_chunks()
             values = lst.values  # flattened StructArray (absolute offsets)
-            kinds = values.field("kind")
-            texts = values.field("text")
             new_text = []
             elem_err = []
-            for k, t in zip(kinds.to_pylist(), texts.to_pylist()):
+            for k, t in zip(values.field("kind").to_pylist(),
+                            values.field("text").to_pylist()):
                 if k == "text" and t is not None:
                     clean, err = kernel(t)
                 else:
                     clean, err = t, False
                 new_text.append(clean)
                 elem_err.append(err)
+                if k == "text":
+                    chars += len(clean or "")
+                elif k is not None:
+                    media += 1
             # carry the element-level validity through the rebuild: without
             # the mask a null span element would come back as a non-null
             # struct of null fields (ADVICE r02), diverging from the input
-            # and from the pandas/exploded paths
+            # and from the pandas path
             elem_mask = (
                 pa.compute.is_null(values) if values.null_count else None
             )
@@ -346,21 +338,33 @@ def sanitize_spans_arrow(
                 for i in range(batch.num_columns)
             ]
             out_names = list(names)
+            # row i owns flattened elements [offs[i], offs[i+1])
+            offs = lst.offsets.to_pylist()
+            rows = range(batch.num_rows)
             if with_errors:
-                # per-document poison count from the list offsets: row i
-                # owns flattened elements [off[i], off[i+1])
-                prefix = [0]
-                for e in elem_err:
-                    prefix.append(prefix[-1] + int(e))
-                offs = lst.offsets.to_pylist()
                 valid = lst.is_valid().to_pylist()
-                counts = [
-                    prefix[offs[i + 1]] - prefix[offs[i]] if valid[i] else None
-                    for i in range(len(lst))
-                ]
-                arrays.append(pa.array(counts, pa.int32()))
-                out_names.append("n_span_errors")
+                errs = [[j - offs[i] for j in range(offs[i], offs[i + 1])
+                         if elem_err[j]] if valid[i] else None for i in rows]
+                arrays.append(pa.array(errs, pa.list_(pa.int32())))
+                out_names.append("span_errors")
+            errors += sum(elem_err)
+            n_spans += sum(max(offs[i + 1] - offs[i], 1) for i in rows)
+            if "_chunk" in names:
+                ids = batch.column(names.index("doc_id")).to_pylist()
+                chunk = batch.column(names.index("_chunk")).to_pylist()
+                for i in rows:
+                    if chunk[i] == 0 and offs[i + 1] - offs[i] < CHUNK_SPANS:
+                        n_docs += 1  # the doc's only row
+                    else:
+                        shared.add(ids[i])
+            else:
+                n_docs += batch.num_rows
             yield pa.RecordBatch.from_arrays(arrays, names=out_names)
+        if lineage is not None and n_spans:
+            from pyspark import TaskContext
+
+            lineage.add({TaskContext.get().partitionId(): (
+                n_spans, n_docs + len(shared), chars, media, errors)})
 
     return df.mapInArrow(fix_batches, schema)
 

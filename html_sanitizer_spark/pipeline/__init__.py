@@ -1,2 +1,2 @@
-"""Batch pipeline: read -> salt -> explode -> sanitize -> reassemble -> write,
+"""Batch pipeline: read -> chunk -> salt -> sanitize -> merge -> write,
 with per-partition lineage and checkpoint/resume."""

@@ -10,6 +10,7 @@ runs over plain parquet with an Iceberg-style JSON manifest we own:
       _staging/bucket=<k>/...     # ONE-pass bucketed copy of the input
       bucket=<k>/part-*.parquet   # one dir per doc_id hash bucket
       _lineage/bucket=<k>/...     # per-partition lineage rows per bucket
+      _quarantine/bucket=<k>/...  # poison spans (on_error keep/null only)
 
 Protocol:
 - bucket(doc) = pmod(xxhash64(doc_id), n_buckets) — stable under retries.
@@ -31,6 +32,11 @@ Protocol:
   reuses the staged copy.
 - The manifest records a config fingerprint; resuming with a different
   config or bucket count refuses rather than mixing outputs.
+- Lineage rows come from the job that does the work: the sanitize kernel
+  counts per salted partition into a driver accumulator that replaces by
+  partition id (a retried or recomputed task reports its partition once,
+  with the same values), and the driver writes the rows to
+  ``_lineage/bucket=<k>`` (tmp file + rename) before the bucket commits.
 """
 
 from __future__ import annotations
@@ -38,19 +44,22 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
 import tempfile
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..configs import settings_for
 from .job import (
-    explode_spans,
-    lineage_metrics,
-    reassemble_spans,
+    lineage_accumulator,
+    merge_chunks,
+    quarantine_spans,
     salt_partitions,
-    sanitize_exploded,
+    sanitize_chunks,
 )
 
 __all__ = ["CheckpointedRun", "run_checkpointed"]
@@ -58,6 +67,30 @@ __all__ = ["CheckpointedRun", "run_checkpointed"]
 MANIFEST_NAME = "_sanitize_manifest.json"
 STAGING_DIR = "_staging"
 STAGING_MARKER = "_staging_commit.json"
+
+# the schema Spark gave the lineage rows when a lineage job wrote them
+_LINEAGE_SCHEMA = pa.schema([
+    pa.field("part_id", pa.int32(), nullable=False),
+    pa.field("n_spans", pa.int64(), nullable=False),
+    pa.field("n_docs_approx", pa.int64(), nullable=False),
+    ("text_bytes_out", pa.int64()), ("n_media_spans", pa.int64()),
+    ("n_errors", pa.int64()), pa.field("bucket", pa.int32(), nullable=False),
+])
+
+
+def _write_lineage(out_dir: str, bucket: int, counts: dict) -> None:
+    """Write a bucket's lineage rows (``counts``: part_id -> the kernel's
+    counter tuple) to ``_lineage/bucket=<k>``: a hidden tmp file renamed
+    into place, after clearing what an uncommitted attempt left there."""
+    rows = [dict(zip(_LINEAGE_SCHEMA.names, (p, *v, bucket)))
+            for p, v in sorted(counts.items())]
+    path = os.path.join(out_dir, "_lineage", f"bucket={bucket}")
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    fd, tmp = tempfile.mkstemp(dir=path, prefix="._lineage")
+    os.close(fd)
+    pq.write_table(pa.Table.from_pylist(rows, schema=_LINEAGE_SCHEMA), tmp)
+    os.replace(tmp, os.path.join(path, "part-00000.parquet"))
 
 
 def _stage_bucketed(df: DataFrame, out_dir: str, n_buckets: int,
@@ -195,8 +228,10 @@ def run_checkpointed(
     ``fail_after_bucket`` is a test hook: raise after committing that many
     buckets to simulate a mid-run crash.
     ``on_error`` != "raise" routes poison spans to an explicit quarantine
-    table (``out_dir/_quarantine/bucket=<k>``, the exploded rows with their
-    span_error flag) in addition to the keep/null output policy — lineage
+    table (``out_dir/_quarantine/bucket=<k>``: one (doc_id, pos, span) row
+    per poison span, ``pos`` absolute in its doc) in addition to the
+    keep/null output policy; the sanitized chunk rows are then persisted
+    so the quarantine and output writes share one kernel run. Lineage
     carries per-partition n_errors either way. The policy is recorded in
     the manifest; resuming under a different policy refuses.
     """
@@ -221,16 +256,15 @@ def run_checkpointed(
             # output dir so read_checkpointed's bucket=* glob stays uniform
             part = spark.createDataFrame([], df.schema)
         salt = salt_partitions(part) if salt_buckets == "auto" else salt_buckets
-        clean = sanitize_exploded(explode_spans(part), settings_obj, salt,
-                                  on_error=on_error, memoize=memoize)
-        clean = clean.persist()
-        result = reassemble_spans(clean, two_phase=True)
+        lineage = lineage_accumulator(spark)
+        chunks = sanitize_chunks(part, settings_obj, salt, on_error=on_error,
+                                 memoize=memoize, lineage=lineage)
         if on_error != "raise":
-            clean.filter(F.col("span_error")).select(
-                "doc_id", "pos", "span"
-            ).write.mode("overwrite").parquet(
+            chunks = chunks.persist()
+            quarantine_spans(chunks).write.mode("overwrite").parquet(
                 os.path.join(out_dir, "_quarantine", f"bucket={bucket}")
             )
+        result = merge_chunks(chunks)
         if table is not None:
             # idempotence on crash-between-commit-points: if a prior attempt
             # already snapshotted this bucket (table commit landed, resume
@@ -240,24 +274,23 @@ def run_checkpointed(
                 and s.get("summary", {}).get("config") == fp
                 for s in table.snapshots()
             )
-            if not already:
+            if already:
+                # rows already in the table: run the kernel for lineage only
+                chunks.write.format("noop").mode("overwrite").save()
+            else:
                 table.append(result, summary={"bucket": bucket, "config": fp})
         else:
             result.write.mode("overwrite").parquet(
                 os.path.join(out_dir, f"bucket={bucket}")
             )
-        lineage_metrics(clean).withColumn("bucket", F.lit(bucket)).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_dir, "_lineage", f"bucket={bucket}"))
-        clean.unpersist()
+        chunks.unpersist()
+        _write_lineage(out_dir, bucket, lineage.value)
         run.commit_bucket(bucket)
         if fail_after_bucket is not None and k + 1 >= fail_after_bucket:
             raise RuntimeError(f"injected failure after bucket {bucket}")
     if staging is not None and len(run.done) == n_buckets:
         # every bucket committed: the staged copy is dead weight, drop it
         # (an Iceberg bucket partition spec has no copy to drop)
-        import shutil
-
         shutil.rmtree(staging, ignore_errors=True)
     return run
 

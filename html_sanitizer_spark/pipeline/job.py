@@ -1,34 +1,25 @@
 """Core batch topology (SURVEY.md §3.4, north_rule plumbing).
 
-Exploded path (default — skew-proof):
+Chunked path (default, skew-proof; sanitize_chunks + merge_chunks):
 
     read (doc_id, spans)
-      -> posexplode_outer(spans)                  [no shuffle: explode is
-                                                   pipelined into the scan]
-      -> repartition by (doc_id, pos div 256)     [SHUFFLE 1 — chunk-salted
-         into P = salt_partitions(input)           (one per core unless the
-                                                   input is large): a
-                                                   mega-doc's chunks spread
-                                                   over all P tasks, so no
-                                                   straggler UDF task; <=256
-                                                   spans per doc per task]
-      -> sanitize_udf on text-kind spans          [the only JVM<->Python
-                                                   Arrow hop]
-      -> two-phase reassembly:
-           groupBy(doc_id, _chunk) partial collect [SHUFFLE 2a — same key as
-                                                   the salt, bounded group
-                                                   size; elided for free if
-                                                   Spark ever preserves
-                                                   partitioning through
-                                                   EvalPythonExec]
-           groupBy(doc_id) merge + array_sort     [SHUFFLE 2b — one row per
-                                                   doc; sort restores span
-                                                   order by pos]
+      -> slice spans map-side into           [no shuffle]
+         (doc_id, _chunk, <=256 spans) rows
+      -> repartition(P, doc_id, _chunk)      [SHUFFLE 1, the salt: P =
+                                              salt_partitions(input); a
+                                              mega-doc's chunks spread
+                                              over all P tasks]
+      -> sanitize_spans_arrow                [the only Python hop: one
+                                              mapInArrow kernel, which
+                                              also counts lineage]
+      -> groupBy(doc_id), chunk arrays       [SHUFFLE 2: one row per doc,
+         flattened in _chunk order            span order restored]
 
-Nested path (``explode=False``): a single pandas UDF over the whole spans
-array — zero reassembly shuffles, order preserved trivially. Wins when doc
-sizes are tame; loses when one doc has 10^6 spans (whole doc on one core).
-``sanitize_spans`` picks per call; bench.py measures both.
+Nested path (``explode=False``): the same Arrow kernel over whole docs (or
+the span-array pandas UDF with ``nested_impl="pandas"``) with zero
+shuffles. Wins when doc sizes are tame; loses when one doc has 10^6 spans
+(whole doc on one core). ``explode="auto"`` picks by a bounded skew probe.
+A null ``spans`` stays null and an empty one stays empty on every path.
 
 Order contract (north_rule): output spans equal input spans in (kind,
 media_ref, offset, order), with text-kind ``text`` sanitized — verified by
@@ -37,11 +28,12 @@ tests/test_spark_tier1.py via span-sequence equality.
 
 from __future__ import annotations
 
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.udfs import (
-    make_sanitize_udf,
+    CHUNK_SPANS,
     make_span_array_udf,
     sanitize_spans_arrow,
 )
@@ -49,10 +41,12 @@ from ..functions.udfs import (
 __all__ = [
     "salt_partitions",
     "sanitize_spans",
+    "sanitize_chunks",
+    "merge_chunks",
+    "lineage_accumulator",
     "extract_spans",
     "explode_spans",
     "reassemble_spans",
-    "lineage_metrics",
     "lineage_metrics_nested",
 ]
 
@@ -106,79 +100,79 @@ def salt_partitions(df: DataFrame) -> int:
     return max(dp, -(-sum(sizes) // conf.filesMaxPartitionBytes()))
 
 
-def sanitize_exploded(
-    exploded: DataFrame, settings=None, salt_buckets: int | None = None,
-    memoize: int = 0, on_error: str = "raise", chunk_size: int = 256,
-) -> DataFrame:
-    """Apply the sanitize UDF to text-kind spans of an exploded frame.
+class _ReplaceByKey(AccumulatorParam):
+    """A later entry for a partition replaces the earlier one, so a
+    retried or recomputed task reports its partition once."""
 
-    ``salt_buckets``: when set, repartitions by (doc_id, _chunk) where
-    ``_chunk = pos div chunk_size`` — a mega-document's chunks spread
-    across tasks before hitting Python (the skew defusal the north_rule
-    requires; per-task state from any one document is bounded by
-    chunk_size spans, the same bound the reassembly's phase-1 group
-    already imposes). r08 change (guide §2.4 — key operations the same
-    way so one exchange CAN be shared): the salt key now equals the
-    reassembly's phase-1 group key. The intended exchange elision does
-    not fire yet — Spark 4.1's EvalPythonExec drops outputPartitioning,
-    so EnsureRequirements re-shuffles above the Arrow UDF regardless
-    (verified with a minimal repro; OPTIMIZATION_r08.md) — but the
-    aligned key measured ~15% on the exploded leg on its own, the gate
-    test_exploded_pipeline_exchange_budget pins the <=3-exchange budget,
-    and if upstream ever preserves partitioning through Python nodes the
-    third exchange disappears with no further change here. The span's
-    own row carries ``pos``, so order needs no co-location; output is
-    span-for-span identical (tier-1 replay + sanitize_structure/span
-    oracles unchanged).
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, acc, update):
+        acc.update(update)
+        return acc
+
+
+def lineage_accumulator(spark: SparkSession):
+    """Accumulator for the kernel's lineage: part_id -> (n_spans, n_docs,
+    text_bytes_out, n_media_spans, n_errors) per partition with rows."""
+    return spark.sparkContext.accumulator({}, _ReplaceByKey())
+
+
+def sanitize_chunks(
+    df: DataFrame, settings=None, salt_buckets: int | None = None, *,
+    memoize: int = 0, on_error: str = "raise", lineage=None,
+) -> DataFrame:
+    """(doc_id, spans) -> sanitized (doc_id, _chunk, spans) chunk rows.
+
+    Each doc's ``spans`` is sliced map-side into rows of at most
+    CHUNK_SPANS spans numbered by ``_chunk`` (a long); an empty or null
+    array is one row that keeps it as it is. ``salt_buckets`` repartitions
+    the rows by (doc_id, _chunk), spreading a mega-document over every
+    task. The Arrow kernel counts lineage into ``lineage`` and, under a
+    non-"raise" policy, adds each row's ``span_errors`` positions.
     """
-    udf = make_sanitize_udf(settings, memoize=memoize, on_error=on_error)
-    salted = False
-    if salt_buckets:
-        exploded = exploded.withColumn(
-            "_chunk",
-            (F.col("pos").cast("long") / F.lit(chunk_size)).cast("long"),
-        ).repartition(salt_buckets, "doc_id", "_chunk")
-        salted = True
-    applies = (F.col("span.kind") == F.lit("text")) & F.col("span.text").isNotNull()
-    if on_error == "raise":
-        clean = F.when(applies, udf(F.col("span.text"))).otherwise(
-            F.col("span.text")
-        )
-        err = F.lit(False)
-    else:
-        # safe modes return struct<text, err>: the poison row is an explicit
-        # flag column (quarantined / counted in lineage), never a silent
-        # pass-through indistinguishable from clean output
-        res = udf(F.col("span.text"))
-        clean = F.when(applies, res["text"]).otherwise(F.col("span.text"))
-        err = F.when(applies, F.coalesce(res["err"], F.lit(False))).otherwise(
-            F.lit(False)
-        )
-    new_span = F.struct(
-        F.col("span.kind").alias("kind"),
-        clean.alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
+    last = F.greatest(F.size("spans") - 1, F.lit(0))  # size(null) is null/-1
+    chunk = F.explode(F.sequence(F.lit(0).cast("long"),
+                                 (last / F.lit(CHUNK_SPANS)).cast("long")))
+    chunks = df.select("doc_id", chunk.alias("_chunk"), "spans").select(
+        "doc_id", "_chunk",
+        F.slice("spans", (F.col("_chunk") * CHUNK_SPANS + 1).cast("int"),
+                CHUNK_SPANS).alias("spans"),
     )
-    return exploded.select(
+    if salt_buckets:
+        chunks = chunks.repartition(salt_buckets, "doc_id", "_chunk")
+    return sanitize_spans_arrow(chunks, settings, memoize=memoize,
+                                on_error=on_error,
+                                with_errors=on_error != "raise",
+                                lineage=lineage)
+
+
+def merge_chunks(chunks: DataFrame) -> DataFrame:
+    """(doc_id, _chunk, spans) -> (doc_id, spans): one groupBy(doc_id)
+    that flattens the chunk arrays in ``_chunk`` order. A null spans
+    array (always a doc's only chunk) flattens to null."""
+    ordered = F.array_sort(F.collect_list(F.struct("_chunk", "spans")))
+    return chunks.groupBy("doc_id").agg(
+        F.flatten(F.transform(ordered, lambda c: c["spans"])).alias("spans"))
+
+
+def quarantine_spans(chunks: DataFrame) -> DataFrame:
+    """(doc_id, pos, span) of every poison span in sanitized chunk rows,
+    ``pos`` absolute in the doc, ``span`` as the keep/null policy left it."""
+    hit = chunks.select("doc_id", "_chunk", "spans",
+                        F.explode("span_errors").alias("i"))
+    return hit.select(
         "doc_id",
-        "pos",
-        # carry the salt/chunk key through so reassemble_spans can group
-        # on the exact attribute the exchange already partitioned by
-        *(["_chunk"] if salted else []),
-        # null-span guard covers both the posexplode_outer empty-doc row
-        # (pos null too) and a null ELEMENT inside a spans array (pos set):
-        # either stays null instead of being rebuilt as a struct of null
-        # fields, matching the arrow/pandas nested paths (ADVICE r02)
-        F.when(F.col("span").isNotNull(), new_span).alias("span"),
-        err.alias("span_error"),
+        (F.col("_chunk") * CHUNK_SPANS + F.col("i")).cast("int").alias("pos"),
+        F.element_at("spans", F.col("i") + 1).alias("span"),
     )
 
 
 def reassemble_spans(
     clean: DataFrame, two_phase: bool = True, chunk_size: int = 256
 ) -> DataFrame:
-    """(doc_id, pos, span) -> (doc_id, spans) with order restored by pos.
+    """(doc_id, pos, span) -> (doc_id, spans) with order restored by pos;
+    the exploded frame of :func:`extract_spans`.
 
     Two-phase mode bounds per-group aggregation state under mega-document
     skew: spans first collect per (doc_id, chunk) where chunk = pos div
@@ -190,13 +184,11 @@ def reassemble_spans(
     single-span chunks). collect_list skips null spans, so empty docs come
     back with an empty array rather than [null].
 
-    When the incoming frame already carries a ``_chunk`` column (the
-    chunk-aligned salt sanitize_exploded applies since r08), phase 1
-    groups on that exact attribute — the same key the salt exchange
-    partitioned by. (The phase-1 exchange is not elided yet: Spark 4.1's
-    EvalPythonExec drops outputPartitioning, see sanitize_exploded; the
-    alignment still avoids any FOURTH shuffle and makes the elision
-    automatic if that upstream limitation lifts.)
+    When the incoming frame carries the ``_chunk`` salt of extract_spans,
+    phase 1 groups on that exact attribute. Spark 4.1's EvalPythonExec
+    drops outputPartitioning, so the Python UDF between salt and phase 1
+    still costs a third exchange; the sanitize path avoids it by
+    sanitizing whole chunk rows (:func:`sanitize_chunks`).
     """
     keyed = F.when(
         F.col("pos").isNotNull(),
@@ -265,7 +257,6 @@ def sanitize_spans(
     settings=None,
     explode: bool | str = True,
     salt_buckets: int | str | None = "auto",
-    two_phase: bool = True,
     memoize: int = 0,
     on_error: str = "raise",
     max_spans_hint: int | None = None,
@@ -273,7 +264,9 @@ def sanitize_spans(
 ) -> DataFrame:
     """End-to-end: sanitize every text-kind span of (doc_id, spans).
 
-    ``salt_buckets="auto"`` sizes the salted shuffle with
+    ``explode=True`` runs the chunked plan (:func:`sanitize_chunks` then
+    :func:`merge_chunks`); ``explode=False`` the nested plan.
+    ``salt_buckets="auto"`` sizes the chunked plan's salted shuffle with
     :func:`salt_partitions`: one Python task per core, more only when the
     input is larger than one ``maxPartitionBytes`` split per core. Pass an
     int to pin it, or None to skip salting entirely.
@@ -285,10 +278,10 @@ def sanitize_spans(
     "pandas" (span-array pandas UDF) for the non-exploded plan."""
     if explode == "auto":
         # pick the physical plan by measured skew: if any document's span
-        # count could monopolize a task, use the exploded+salted plan;
-        # otherwise the nested single-UDF plan (no reassembly shuffles)
-        # wins. on_error/memoize are honored on BOTH plans (VERDICT r03
-        # #8), so the knobs no longer force the choice.
+        # count could monopolize a task, use the chunked+salted plan;
+        # otherwise the nested single-kernel plan (no shuffles) wins.
+        # on_error/memoize are honored on BOTH plans (VERDICT r03 #8), so
+        # the knobs no longer force the choice.
         if max_spans_hint is None:
             max_spans_hint = _probe_max_spans(df)
         explode = max_spans_hint > _AUTO_EXPLODE_THRESHOLD
@@ -301,9 +294,8 @@ def sanitize_spans(
         return df.select("doc_id", udf("spans").alias("spans"))
     if salt_buckets == "auto":
         salt_buckets = salt_partitions(df)
-    clean = sanitize_exploded(explode_spans(df), settings, salt_buckets,
-                              memoize=memoize, on_error=on_error)
-    return reassemble_spans(clean, two_phase=two_phase)
+    return merge_chunks(sanitize_chunks(df, settings, salt_buckets,
+                                        memoize=memoize, on_error=on_error))
 
 
 def extract_spans(
@@ -331,7 +323,7 @@ def extract_spans(
     salted = False
     if salt_buckets:
         # chunk-aligned salt (r08): same key the reassembly groups on —
-        # see sanitize_exploded for why/limits
+        # see reassemble_spans for why/limits
         exploded = exploded.withColumn(
             "_chunk", (F.col("pos").cast("long") / F.lit(256)).cast("long")
         ).repartition(salt_buckets, "doc_id", "_chunk")
@@ -358,46 +350,16 @@ def extract_spans(
     return reassemble_spans(ex, two_phase=two_phase)
 
 
-def lineage_metrics(clean: DataFrame) -> DataFrame:
-    """Per-partition lineage over the sanitized exploded frame
-    (north_rule: per-partition lineage rows). Cheap second aggregation —
-    run it on the same cached frame as the reassembly."""
-    err_agg = (
-        F.sum(F.col("span_error").cast("int"))
-        if "span_error" in clean.columns
-        else F.lit(0)
-    )
-    return (
-        clean.withColumn("part_id", F.spark_partition_id())
-        .groupBy("part_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_spans"),
-            F.approx_count_distinct("doc_id").alias("n_docs_approx"),
-            F.sum(
-                F.when(F.col("span.kind") == "text", F.length("span.text")).otherwise(0)
-            ).alias("text_bytes_out"),
-            F.sum(F.when(F.col("span.kind") != "text", 1).otherwise(0)).alias(
-                "n_media_spans"
-            ),
-            err_agg.alias("n_errors"),
-        )
-    )
-
-
 def lineage_metrics_nested(clean: DataFrame) -> DataFrame:
-    """Lineage rollup for the NESTED plan (VERDICT r04 #7): same columns
-    as lineage_metrics, computed from the (doc_id, spans[, n_span_errors])
-    frame ``sanitize_spans_arrow(..., with_errors=True)`` returns — the
-    nested path gets the same quarantine/lineage visibility as the
-    exploded frame's span_error flag. All per-row work is map-side array
-    expressions (aggregate/filter over the spans array); the only shuffle
-    is the per-partition groupBy, identical to lineage_metrics. Null span
-    elements count toward n_spans (as in the exploded frame) but toward
-    neither bytes nor media, and an empty/null spans array counts as ONE
-    span — posexplode_outer keeps a placeholder row for such docs, so the
-    exploded rollup sees it; greatest(size, 1) keeps the parity contract
-    exact on empty docs too (ADVICE r05 #1)."""
-    has_err = "n_span_errors" in clean.columns
+    """Lineage rollup for the NESTED plan (VERDICT r04 #7), computed from
+    the (doc_id, spans[, span_errors]) frame
+    ``sanitize_spans_arrow(..., with_errors=True)`` returns. Same columns
+    and counting rules as the chunked plan's in-kernel lineage
+    (:func:`lineage_accumulator`): null span elements count toward
+    n_spans but toward neither bytes nor media, and an empty/null spans
+    array counts as ONE span (ADVICE r05 #1). All per-row work is map-side
+    array expressions; the only shuffle is the per-partition groupBy."""
+    has_err = "span_errors" in clean.columns
     spans = F.coalesce(F.col("spans"), F.array())
     row = clean.select(
         "doc_id",
@@ -419,7 +381,7 @@ def lineage_metrics_nested(clean: DataFrame) -> DataFrame:
             F.filter(spans, lambda s: s.isNotNull() & (s["kind"] != F.lit("text")))
         ).alias("_n_media"),
         (
-            F.coalesce(F.col("n_span_errors"), F.lit(0))
+            F.greatest(F.size("span_errors"), F.lit(0))
             if has_err
             else F.lit(0)
         ).alias("_n_err"),

@@ -1868,8 +1868,8 @@ def spans_from_documents(spark, sf_dir):
 
 
 def q_sanitize_structure(spark, sf_dir):
-    """Pipeline structure invariants after a full explode->sanitize->
-    reassemble round trip: span count, kind sequence, media refs, offsets —
+    """Pipeline structure invariants after a full chunk->sanitize->
+    merge round trip: span count, kind sequence, media refs, offsets —
     all oracle-checkable because sanitize never touches them."""
     from .pipeline.job import sanitize_spans
 
@@ -1939,7 +1939,7 @@ def q_sanitize_text_plain(spark, sf_dir):
     whitespace collapse — probe-verified against the pure engine in
     tests/test_engine_unit.py (plain-subset equivalence) — so DuckDB can
     replay the FULL sanitize even though the run still goes through the
-    real Spark pipeline (explode -> salted Arrow UDF -> reassemble). The
+    real Spark pipeline (chunk -> salted Arrow kernel -> merge). The
     irreducible tree cases stay in q_sanitize_text (rows-only, pinned by
     the 112-pair golden replay)."""
     from .pipeline.job import sanitize_spans

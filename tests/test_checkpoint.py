@@ -142,3 +142,193 @@ def test_quarantine_written_on_keep(spark, tmp_path, monkeypatch):
     # policy drift refused on resume
     with pytest.raises(ValueError, match="on_error"):
         run_checkpointed(spark, df, out, n_buckets=2, on_error="null")
+
+
+def test_null_spans_stay_null_on_every_path(spark, tmp_path):
+    """A doc whose spans is null comes back null, and an empty one empty,
+    from every sanitize plan and from run_checkpointed — so with
+    explode="auto" a doc's output no longer depends on the other docs."""
+    from html_sanitizer_spark.pipeline.job import sanitize_spans
+    from html_sanitizer_spark.pipeline.synth import DOC_SCHEMA
+
+    span = {"kind": "text", "text": "<b>x</b>", "media_ref": "", "offset": 0}
+    df = spark.createDataFrame(
+        [{"doc_id": "null", "spans": None}, {"doc_id": "empty", "spans": []},
+         {"doc_id": "one", "spans": [span]},
+         {"doc_id": "mega", "spans": [span] * 600}],
+        schema=DOC_SCHEMA,
+    )
+    outs = [sanitize_spans(spark, df, explode=e, salt_buckets=2)
+            for e in (True, False, "auto")]
+    run_checkpointed(spark, df, str(tmp_path / "out"), n_buckets=2)
+    outs.append(read_checkpointed(spark, str(tmp_path / "out")))
+    for out in outs:
+        rows = {r["doc_id"]: r["spans"] for r in out.collect()}
+        assert rows["null"] is None
+        assert rows["empty"] == []
+        assert len(rows["mega"]) == 600
+        assert rows["one"][0]["text"] == "<strong>x</strong>"
+
+
+def _lineage_table(out):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    files = sorted(
+        f for b in sorted((out / "_lineage").glob("bucket=*"))
+        for f in b.glob("*.parquet"))
+    return pa.concat_tables([pq.read_table(f) for f in files])
+
+
+def test_lineage_schema_and_exact_docs(spark, tmp_path):
+    """The driver-written lineage rows keep the schema Spark wrote before
+    (so a run resumed across the change reads _lineage/bucket=* as one
+    table); n_docs_approx is exact; partitions without rows write no row."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    df = synth_spans_df(spark, 40, seed=3, mega_every=0)
+    out = tmp_path / "out"
+    run_checkpointed(spark, df, str(out), n_buckets=2, salt_buckets=16)
+    lineage = _lineage_table(out)
+    want = [("part_id", "int32", False), ("n_spans", "int64", False),
+            ("n_docs_approx", "int64", False), ("text_bytes_out", "int64", True),
+            ("n_media_spans", "int64", True), ("n_errors", "int64", True),
+            ("bucket", "int32", False)]
+    for b in sorted((out / "_lineage").glob("bucket=*")):
+        schema = pq.read_schema(next(b.glob("*.parquet")))
+        assert [(f.name, str(f.type), f.nullable) for f in schema] == want
+    rows = lineage.to_pylist()
+    # 40 one-chunk docs over 2 x 16 partitions: some partitions are empty
+    # and write no row; every row counts its docs exactly
+    assert 0 < len(rows) < 32
+    assert all(r["n_spans"] > 0 and r["n_docs_approx"] > 0 for r in rows)
+    assert sum(r["n_docs_approx"] for r in rows) == 40
+    assert sum(r["n_errors"] for r in rows) == 0
+
+    # a bucket written by Spark with the same schema (as a run of the
+    # previous code left it) reads together with the driver-written ones
+    old_schema = T.StructType(
+        [T.StructField(n, T.IntegerType() if t == "int32" else T.LongType(), nl)
+         for n, t, nl in want])
+    spark.createDataFrame([(0, 1, 1, 5, 0, 0, 7)], old_schema).write.parquet(
+        str(out / "_lineage" / "bucket=7"))
+    both = spark.read.parquet(str(out / "_lineage" / "bucket=*"))
+    assert both.count() == len(rows) + 1
+    assert dict(both.dtypes)["part_id"] == "int"
+    assert dict(both.dtypes)["n_spans"] == "bigint"
+
+
+def test_quarantine_positions_are_absolute(spark, tmp_path, monkeypatch):
+    """Under keep and null the quarantine table holds one (doc_id, pos,
+    span) row per poison span, pos absolute in the doc even when the
+    span sits in a later 256-span chunk; lineage counts each once."""
+    from html_sanitizer_spark.functions import udfs
+    from html_sanitizer_spark.pipeline.synth import DOC_SCHEMA
+
+    orig = udfs.sanitize
+
+    def bomb(t, s):
+        if "BOOM" in t:
+            raise RuntimeError("poison span")
+        return orig(t, s)
+
+    monkeypatch.setattr(udfs, "sanitize", bomb)
+    poison = {7, 300, 599}
+    mega = [{"kind": "text", "text": f"<i>BOOM {i}</i>" if i in poison
+             else f"<b>{i}</b>", "media_ref": "", "offset": i}
+            for i in range(600)]
+    df = spark.createDataFrame(
+        [{"doc_id": "mega", "spans": mega},
+         {"doc_id": "small", "spans": [mega[7]]}], schema=DOC_SCHEMA)
+    for policy in ("keep", "null"):
+        out = tmp_path / policy
+        run_checkpointed(spark, df, str(out), n_buckets=2, on_error=policy)
+        q = spark.read.parquet(str(out / "_quarantine" / "bucket=*")).collect()
+        assert sorted((r["doc_id"], r["pos"]) for r in q) == [
+            ("mega", 7), ("mega", 300), ("mega", 599), ("small", 0)]
+        for r in q:
+            assert r["span"]["offset"] == (r["pos"] if r["doc_id"] == "mega" else 7)
+            want = f"<i>BOOM {r['span']['offset']}</i>" if policy == "keep" else None
+            assert r["span"]["text"] == want
+        assert sum(_lineage_table(out).column("n_errors").to_pylist()) == 4
+
+
+_RETRY_DRIVER = """
+import json, os, sys
+from pyspark import TaskContext
+from html_sanitizer_spark.functions import udfs
+from html_sanitizer_spark.pipeline.checkpoint import run_checkpointed
+from html_sanitizer_spark.pipeline.session import get_spark
+from html_sanitizer_spark.pipeline.synth import synth_spans_df
+
+work = sys.argv[1]
+marker = os.path.join(work, "crashed")
+spark = get_spark("retry", parallelism=4, shuffle_partitions=4,
+                  extra_conf={"spark.master": "local[4,2]"})
+df = synth_spans_df(spark, 60, seed=8, mega_every=25).cache()
+run_checkpointed(spark, df, os.path.join(work, "clean"), n_buckets=2)
+
+orig = udfs.sanitize
+
+
+def crash_once(t, s):
+    # kill the Python worker mid-kernel on attempt 0 of one partition
+    ctx = TaskContext.get()
+    if (ctx.partitionId() == 0 and ctx.attemptNumber() == 0
+            and not os.path.exists(marker)):
+        open(marker, "w").close()
+        os._exit(1)
+    return orig(t, s)
+
+
+udfs.sanitize = crash_once
+sc = spark.sparkContext
+sc.setJobGroup("crash", "run with one killed worker")
+run_checkpointed(spark, df, os.path.join(work, "crash"), n_buckets=2)
+failed = 0
+for j in sc.statusTracker().getJobIdsForGroup("crash"):
+    for sid in sc.statusTracker().getJobInfo(j).stageIds:
+        info = sc.statusTracker().getStageInfo(sid)
+        failed += info.numFailedTasks if info else 0
+print("RESULT" + json.dumps({"failed_tasks": failed,
+                             "crashed": os.path.exists(marker)}))
+spark.stop()
+"""
+
+
+def _rows_and_lineage(out):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pa.concat_tables([pq.read_table(f)
+                          for f in sorted(out.glob("bucket=*/*.parquet"))])
+    rows = sorted(zip(t.column("doc_id").to_pylist(),
+                      t.column("spans").to_pylist()), key=lambda r: r[0])
+    lineage = sorted(tuple(r.values()) for r in _lineage_table(out).to_pylist())
+    return rows, lineage
+
+
+def test_killed_worker_retry_matches_clean_run(tmp_path):
+    """A Python worker killed inside the sanitize kernel (os._exit on
+    attempt 0 of one partition) under local[4,2] is retried; the retried
+    run's output rows and lineage rows equal a clean run's, and the
+    in-kernel lineage reports the retried partition once."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run(
+        [sys.executable, "-c", _RETRY_DRIVER, str(tmp_path)],
+        capture_output=True, text=True, timeout=600, cwd=repo,
+    )
+    assert r.returncode == 0, (r.stdout[-1000:], r.stderr[-3000:])
+    payload = json.loads(
+        [ln for ln in r.stdout.splitlines() if ln.startswith("RESULT")][-1][6:])
+    assert payload["crashed"]
+    assert payload["failed_tasks"] >= 1
+    clean_rows, clean_lineage = _rows_and_lineage(tmp_path / "clean")
+    crash_rows, crash_lineage = _rows_and_lineage(tmp_path / "crash")
+    assert len(clean_rows) == 60
+    assert crash_rows == clean_rows
+    assert crash_lineage == clean_lineage

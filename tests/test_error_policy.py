@@ -84,34 +84,33 @@ def test_auto_plan_selection(spark):
         assert out.count() == 20
 
 
-def test_on_error_flag_visible_in_lineage(spark, poison, doc):
-    """Safe modes must not be silent: the poison span carries an explicit
-    span_error flag on the exploded frame and lineage counts it."""
+def _kernel_lineage(spark, docs, **kw):
+    """(sanitized chunk rows, in-kernel lineage) of the chunked plan."""
     from html_sanitizer_spark.pipeline.job import (
-        explode_spans,
-        lineage_metrics,
-        sanitize_exploded,
+        lineage_accumulator,
+        sanitize_chunks,
     )
 
-    clean = sanitize_exploded(explode_spans(doc), None, salt_buckets=2,
-                              on_error="keep")
-    rows = {r["span"]["text"]: r["span_error"] for r in clean.collect()}
-    assert rows["<p>BOOM</p>"] is True
-    assert all(not v for t, v in rows.items() if t != "<p>BOOM</p>")
-    lineage = lineage_metrics(clean).collect()
-    assert sum(r["n_errors"] for r in lineage) == 1
+    acc = lineage_accumulator(spark)
+    rows = sanitize_chunks(docs, None, salt_buckets=2, lineage=acc,
+                           **kw).collect()
+    return rows, acc.value
+
+
+def test_on_error_flag_visible_in_lineage(spark, poison, doc):
+    """Safe modes must not be silent: the chunk row carries the poison
+    span's position in span_errors and the in-kernel lineage counts it."""
+    rows, lineage = _kernel_lineage(spark, doc, on_error="keep")
+    assert [r["span_errors"] for r in rows] == [[1]]
+    assert rows[0]["spans"][1]["text"] == "<p>BOOM</p>"
+    assert sum(v[4] for v in lineage.values()) == 1
 
 
 def test_raise_mode_lineage_has_zero_errors(spark, doc):
-    from html_sanitizer_spark.pipeline.job import (
-        explode_spans,
-        lineage_metrics,
-        sanitize_exploded,
-    )
-
-    clean = sanitize_exploded(explode_spans(doc), None, salt_buckets=2)
-    lineage = lineage_metrics(clean).collect()
-    assert sum(r["n_errors"] for r in lineage) == 0
+    rows, lineage = _kernel_lineage(spark, doc)
+    assert "span_errors" not in rows[0]
+    assert sum(v[4] for v in lineage.values()) == 0
+    assert sum(v[0] for v in lineage.values()) == 2
 
 
 def test_auto_probe_is_bounded(spark):
@@ -154,8 +153,8 @@ def test_nested_pandas_and_arrow_agree(spark):
 
 def test_arrow_with_errors_counts_poison_per_doc(spark, poison, doc):
     """Nested quarantine visibility (VERDICT r03 #8): with_errors=True
-    appends a per-document n_span_errors count computed from the list
-    offsets — the nested analog of the exploded frame's span_error flag."""
+    appends span_errors, the positions of each row's poison spans computed
+    from the list offsets."""
     from html_sanitizer_spark.functions.udfs import sanitize_spans_arrow
 
     clean_doc = spark.createDataFrame(
@@ -168,8 +167,8 @@ def test_arrow_with_errors_counts_poison_per_doc(spark, poison, doc):
     out = sanitize_spans_arrow(doc.union(clean_doc), on_error="keep",
                                with_errors=True)
     rows = {r["doc_id"]: r for r in out.collect()}
-    assert rows["d"]["n_span_errors"] == 1
-    assert rows["c"]["n_span_errors"] == 0
+    assert rows["d"]["span_errors"] == [1]
+    assert rows["c"]["span_errors"] == []
     assert [s["text"] for s in rows["d"]["spans"]] == [
         "<p>ok</p>", "<p>BOOM</p>"
     ]
@@ -262,18 +261,13 @@ def test_edge_span_arrays_agree_across_paths(spark, spans):
 
 def test_lineage_parity_exploded_vs_nested_arrow(spark, poison):
     """VERDICT r04 #7: under on_error='keep' with planted poison
-    fragments, the nested arrow plan's partition rollup
-    (lineage_metrics_nested over with_errors=True output) must agree with
-    the exploded plan's lineage_metrics on every corpus-level total —
-    n_errors above all, plus span/media/byte accounting. Partition
-    boundaries differ by plan, so parity is on the summed rollup."""
+    fragments, the chunked plan's in-kernel lineage must agree with the
+    nested arrow plan's partition rollup (lineage_metrics_nested over
+    with_errors=True output) on every corpus-level total — n_errors above
+    all, plus span/media/byte accounting. Partition boundaries differ by
+    plan, so parity is on the summed rollup."""
     from html_sanitizer_spark.functions.udfs import sanitize_spans_arrow
-    from html_sanitizer_spark.pipeline.job import (
-        explode_spans,
-        lineage_metrics,
-        lineage_metrics_nested,
-        sanitize_exploded,
-    )
+    from html_sanitizer_spark.pipeline.job import lineage_metrics_nested
 
     docs = spark.createDataFrame(
         [
@@ -289,30 +283,23 @@ def test_lineage_parity_exploded_vs_nested_arrow(spark, poison):
             {"doc_id": "c", "spans": [
                 {"kind": "video", "text": "", "media_ref": "m://2", "offset": 0},
             ]},
-            # ADVICE r05 #1: empty and null spans arrays — posexplode_outer
-            # keeps one placeholder row each, so the exploded rollup counts
-            # them as n_spans=1; the nested path must agree.
+            # ADVICE r05 #1: empty and null spans arrays count as one span
+            # each on both plans.
             {"doc_id": "d-empty", "spans": []},
             {"doc_id": "e-null", "spans": None},
         ],
         schema=DOC_SCHEMA,
     )
-
-    def totals(rollup):
-        rows = rollup.collect()
-        return {
-            k: sum(r[k] for r in rows)
-            for k in ("n_spans", "text_bytes_out", "n_media_spans", "n_errors")
-        }
-
-    exploded = sanitize_exploded(
-        explode_spans(docs), None, salt_buckets=4, on_error="keep"
-    )
+    keys = ("n_spans", "text_bytes_out", "n_media_spans", "n_errors")
+    _, lineage = _kernel_lineage(spark, docs, on_error="keep")
+    t_kernel = {k: sum(v[i] for v in lineage.values())
+                for k, i in zip(keys, (0, 2, 3, 4))}
     nested = sanitize_spans_arrow(docs, None, on_error="keep",
                                   with_errors=True)
-    t_exp = totals(lineage_metrics(exploded))
-    t_nest = totals(lineage_metrics_nested(nested))
-    assert t_exp == t_nest, (t_exp, t_nest)
-    assert t_exp["n_errors"] == 2  # both planted BOOMs counted, once each
-    assert t_exp["n_media_spans"] == 2
-    assert t_exp["n_spans"] == 8  # 6 real + 1 empty-doc + 1 null-doc placeholder
+    rows = lineage_metrics_nested(nested).collect()
+    t_nest = {k: sum(r[k] for r in rows) for k in keys}
+    assert t_kernel == t_nest, (t_kernel, t_nest)
+    assert t_kernel["n_errors"] == 2  # both planted BOOMs counted, once each
+    assert t_kernel["n_media_spans"] == 2
+    assert t_kernel["n_spans"] == 8  # 6 real + 1 empty-doc + 1 null-doc
+    assert sum(v[1] for v in lineage.values()) == 5  # exact, 1-chunk docs

@@ -28,7 +28,7 @@ def test_100k_span_single_doc(spark):
                 yield pd.DataFrame({"doc_id": ["mega"], "spans": [spans]})
 
     df = spark.range(1).mapInPandas(gen, schema=DOC_SCHEMA)
-    out = sanitize_spans(spark, df, salt_buckets=64, two_phase=True)
+    out = sanitize_spans(spark, df, salt_buckets=64)
     rows = out.collect()
     assert len(rows) == 1
     spans = rows[0]["spans"]

@@ -11,7 +11,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
-from html_sanitizer_spark.pipeline.job import explode_spans, sanitize_exploded
+from html_sanitizer_spark.pipeline.job import sanitize_chunks
 from html_sanitizer_spark.queries import q_ann_cosine_topk, spans_from_documents
 
 SF = "/root/testdata/sf0.001"
@@ -88,41 +88,63 @@ def test_ann_query_small_side_by_closure(spark):
 
 
 def test_salted_exchange_feeds_python_stage(spark):
-    """The Arrow UDF must run AFTER the salted repartition so mega-document
-    spans spread across tasks before hitting Python. Since r08 the salt key
-    is (doc_id, _chunk = pos div 256) — still mega-doc-defusing (a doc's
-    chunks spread over all buckets, <=256 spans per doc per task) AND
-    aligned with the reassembly's phase-1 group key so that groupBy needs
-    no exchange of its own (see test_reassembly_phase1_reuses_salt_exchange)."""
+    """The Arrow kernel must run AFTER the salted repartition so a
+    mega-document's chunks spread across tasks before hitting Python. The
+    salt key is (doc_id, _chunk): a doc's <=256-span chunk rows spread
+    over all buckets, so no task holds more than 256 spans of one doc."""
     df = spans_from_documents(spark, SF)
-    clean = sanitize_exploded(explode_spans(df), None, salt_buckets=16)
-    plan = _plan(clean)
-    arrow_at = plan.index("ArrowEvalPython")
+    plan = _plan(sanitize_chunks(df, None, salt_buckets=16))
+    kernel_at = plan.index("MapInArrow")
     exch_at = plan.index("REPARTITION_BY_NUM")
     # tree prints parents first: the Exchange (child) appears after the
-    # ArrowEvalPython line, and the repartition key is the chunk salt
-    assert exch_at > arrow_at, plan
-    assert "hashpartitioning(doc_id" in plan and "_chunk" in plan, plan
+    # MapInArrow line, and the repartition key is the chunk salt
+    assert exch_at > kernel_at, plan
+    assert _salt_counts(plan) == [16], plan
+    assert "ArrowEvalPython" not in plan, plan
 
 
-def test_exploded_pipeline_exchange_budget(spark):
-    """r08 exchange-budget gate (guide §2.4): the full exploded pipeline
-    is exactly THREE hash exchanges — chunk salt, phase-1 (doc_id, _chunk)
-    collect, per-doc merge — and the salt keys EQUAL the phase-1 group
-    keys. Spark 4.1's EvalPythonExec drops outputPartitioning (verified
-    with a minimal repro, OPTIMIZATION_r08.md), so the phase-1 exchange
-    cannot be elided while the Arrow UDF sits between salt and reassembly;
-    if that ever changes upstream, this count drops to 2 for free because
-    the keys already line up. A 4th exchange appearing means a regression
-    (e.g. someone re-keyed the salt away from the reassembly chunks)."""
+def _hash_exchanges(plan: str) -> int:
+    return plan.count("Exchange hashpartitioning")
+
+
+def _bucket_plans(monkeypatch, plan_of) -> list:
+    """plan_of(merged frame) for every bucket run_checkpointed runs."""
+    from html_sanitizer_spark.pipeline import checkpoint
+
+    plans, real = [], checkpoint.merge_chunks
+
+    def spy(chunks):
+        merged = real(chunks)
+        plans.append(plan_of(merged))
+        return merged
+
+    monkeypatch.setattr(checkpoint, "merge_chunks", spy)
+    return plans
+
+
+def test_exploded_pipeline_exchange_budget(spark, tmp_path, monkeypatch):
+    """Exchange-budget gate (guide §2.4): the chunked sanitize plan is at
+    most TWO hash exchanges — the (doc_id, _chunk) salt and the per-doc
+    merge — both for sanitize_spans(explode=True) and for every
+    run_checkpointed bucket. The kernel sanitizes whole chunk rows, so
+    no phase-1 (doc_id, _chunk) collect sits between them; a third
+    exchange appearing means a regression."""
+    from html_sanitizer_spark.pipeline import checkpoint
     from html_sanitizer_spark.pipeline.job import sanitize_spans
 
     out = sanitize_spans(spark, spans_from_documents(spark, SF),
                          explode=True, salt_buckets=16)
     plan = _plan(out)
-    assert plan.count("Exchange hashpartitioning") <= 3, plan
-    # the salt exchange and the phase-1 aggregate share the same key pair
-    assert "_chunk" in plan, plan
+    assert _hash_exchanges(plan) <= 2, plan
+    assert _salt_counts(plan) == [16], plan
+
+    plans = _bucket_plans(monkeypatch, _plan)
+    checkpoint.run_checkpointed(spark, _spans_parquet(spark, str(tmp_path / "d")),
+                                str(tmp_path / "out"), n_buckets=2)
+    assert len(plans) == 2
+    for plan in plans:
+        assert _hash_exchanges(plan) <= 2, plan
+        assert len(_salt_counts(plan)) == 1, plan
 
 
 _SALT_KEY = re.compile(
@@ -196,14 +218,14 @@ def test_checkpointed_bucket_salt_follows_the_rule(spark, tmp_path, monkeypatch)
 
     df = _spans_parquet(spark, str(tmp_path / "docs"))
     seen = []
-    real = checkpoint.sanitize_exploded
+    real = checkpoint.sanitize_chunks
 
-    def spy(exploded, settings, salt, **kw):
-        out = real(exploded, settings, salt, **kw)
-        seen.append((_bytes_of(exploded), salt, _salt_counts(_plan(out))))
+    def spy(part, settings, salt, **kw):
+        out = real(part, settings, salt, **kw)
+        seen.append((_bytes_of(part), salt, _salt_counts(_plan(out))))
         return out
 
-    monkeypatch.setattr(checkpoint, "sanitize_exploded", spy)
+    monkeypatch.setattr(checkpoint, "sanitize_chunks", spy)
     dp = spark.sparkContext.defaultParallelism
     with _max_partition_bytes(spark, _bytes_of(df) // (4 * dp)) as mpb:
         checkpoint.run_checkpointed(spark, df, str(tmp_path / "auto"),
@@ -216,6 +238,31 @@ def test_checkpointed_bucket_salt_follows_the_rule(spark, tmp_path, monkeypatch)
     checkpoint.run_checkpointed(spark, df, str(tmp_path / "pinned"),
                                 n_buckets=2, salt_buckets=7)
     assert [(salt, counts) for _, salt, counts in seen] == [(7, [7])] * 2
+
+
+def test_checkpointed_raise_run_job_budget(spark, tmp_path, monkeypatch):
+    """Under on_error="raise" a run_checkpointed call is one staging job
+    plus at most three jobs per bucket (the salt and merge shuffle-map
+    stages and the write): lineage comes out of the sanitize kernel, so
+    there is no lineage job, and nothing is persisted."""
+    from html_sanitizer_spark.pipeline import checkpoint
+
+    df = _spans_parquet(spark, str(tmp_path / "docs"))
+    plans = _bucket_plans(
+        monkeypatch, lambda df: df._jdf.queryExecution().toString())
+    sc = spark.sparkContext
+    sc.setJobGroup("ckpt-budget", "run_checkpointed job budget")
+    try:
+        checkpoint.run_checkpointed(spark, df, str(tmp_path / "out"),
+                                    n_buckets=2)
+        jobs = list(sc.statusTracker().getJobIdsForGroup("ckpt-budget"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert 0 < len(jobs) <= 1 + 3 * 2, jobs
+    assert len(plans) == 2
+    for plan in plans:
+        assert "InMemoryRelation" not in plan, plan
 
 
 def test_salt_sizing_launches_no_job(spark, tmp_path):
@@ -255,9 +302,9 @@ def test_megadoc_chunks_reach_every_salted_partition(spark):
 
     df = spark.range(1).mapInPandas(gen, schema=DOC_SCHEMA)
     p = salt_partitions(df)
-    clean = sanitize_exploded(explode_spans(df), None, salt_buckets=p)
-    assert _salt_counts(_plan(clean)) == [p]
-    parts = clean.select(F.spark_partition_id().alias("p")).distinct().count()
+    chunks = sanitize_chunks(df, None, salt_buckets=p)
+    assert _salt_counts(_plan(chunks)) == [p]
+    parts = chunks.select(F.spark_partition_id().alias("p")).distinct().count()
     assert parts == p
 
 

@@ -4,19 +4,20 @@ Each golden case becomes one document of interleaved spans
 (media / text / media). The north_rule invariant is asserted per document:
 span-sequence equality on (kind, text, media_ref, order) — media spans
 byte-identical and in position, text spans equal to the golden ``after``.
-Both physical plans (exploded+salted+reassembled, and nested single-UDF)
+Both physical plans (chunked+salted+merged, and nested single-kernel)
 must produce identical results.
 """
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from html_sanitizer_spark.engine.settings import Settings
 from html_sanitizer_spark.pipeline.job import (
-    explode_spans,
-    lineage_metrics,
-    sanitize_exploded,
+    lineage_accumulator,
+    merge_chunks,
+    sanitize_chunks,
     sanitize_spans,
 )
 from html_sanitizer_spark.pipeline.synth import golden_spans_df, synth_spans_df
@@ -42,7 +43,7 @@ def test_golden_replay_spark(spark, config, explode):
     df = golden_spans_df(spark, config)
     result = sanitize_spans(
         spark, df, settings=Settings(CONFIGS[config]), explode=explode,
-        salt_buckets=8, two_phase=True,
+        salt_buckets=8,
     )
     rows = {r["doc_id"]: r["spans"] for r in result.collect()}
     want = _expected_by_doc(config)
@@ -124,7 +125,7 @@ def test_exploded_and_nested_agree(spark):
 def test_order_preserved_under_salting(spark):
     """Many spans, aggressive salting: order must be exactly restored."""
     df = synth_spans_df(spark, 20, seed=3, mega_every=7).cache()  # incl megadocs
-    out = sanitize_spans(spark, df, explode=True, salt_buckets=16, two_phase=True)
+    out = sanitize_spans(spark, df, explode=True, salt_buckets=16)
     in_rows = {r["doc_id"]: r["spans"] for r in df.collect()}
     out_rows = {r["doc_id"]: r["spans"] for r in out.collect()}
     assert set(in_rows) == set(out_rows)
@@ -164,11 +165,36 @@ def test_empty_and_null_spans(spark):
 
 
 def test_lineage_metrics(spark):
-    df = synth_spans_df(spark, 100, seed=11, mega_every=0)
-    clean = sanitize_exploded(explode_spans(df), salt_buckets=4)
-    m = lineage_metrics(clean).collect()
-    assert sum(r["n_spans"] for r in m) >= 100
-    assert all(r["text_bytes_out"] >= 0 for r in m)
+    """The chunked plan's kernel counts lineage per salted partition: the
+    totals match the corpus, n_docs is the exact number of distinct docs
+    in each partition (a mega-doc counts in every partition it reaches),
+    and partitions without rows report nothing."""
+    df = synth_spans_df(spark, 100, seed=11, mega_every=40).cache()
+    acc = lineage_accumulator(spark)
+    chunks = sanitize_chunks(df, salt_buckets=8, lineage=acc)
+    docs = {r["doc_id"]: r["spans"] for r in merge_chunks(chunks).collect()}
+    m = acc.value
+    assert sum(v[0] for v in m.values()) == sum(
+        max(len(s or []), 1) for s in docs.values())
+    assert sum(v[2] for v in m.values()) == sum(
+        len(s["text"]) for ss in docs.values() for s in ss or []
+        if s and s["kind"] == "text" and s["text"] is not None)
+    assert sum(v[3] for v in m.values()) == sum(
+        1 for ss in docs.values() for s in ss or [] if s and s["kind"] != "text")
+    got = {(r["p"], r["doc_id"]) for r in chunks.select(
+        F.spark_partition_id().alias("p"), "doc_id").collect()}
+    want_docs = {}
+    for p, _ in got:
+        want_docs[p] = want_docs.get(p, 0) + 1
+    assert {p: v[1] for p, v in m.items()} == want_docs
+    assert sum(want_docs.values()) > len(docs)  # the mega-docs spread
+    assert all(v[0] > 0 for v in m.values())
+    assert len(m) <= 8
+    empty = lineage_accumulator(spark)
+    sanitize_chunks(df.limit(0), salt_buckets=4,
+                    lineage=empty).write.format("noop").mode("overwrite").save()
+    assert empty.value == {}
+    df.unpersist()
 
 
 def test_extract_spans_interleaved_contract(spark):
