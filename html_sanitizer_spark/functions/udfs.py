@@ -8,10 +8,11 @@ setup which lives in module/executor scope. Per-row Python UDFs are never
 used (north_rule requirement).
 
 Shapes:
-- ``sanitize_spans_arrow`` — the ``mapInArrow`` span-array kernel of both
+- ``arrow_span_kernel``   — the per-batch Arrow span-array kernel of both
   sanitize plans (whole docs, or the chunked plan's <=256-span rows):
   sanitizes text-kind spans inside the array, passes media spans through
-  byte-identical, preserving order trivially.
+  byte-identical, preserving order trivially. ``sanitize_spans_arrow``
+  runs it over a frame with ``mapInArrow``.
 - ``make_span_array_udf`` — the same over a pandas UDF (``nested_impl``).
 - ``make_sanitize_udf``   — Series[str] -> Series[str], for plain string
   columns (streaming, SQL registration).
@@ -32,10 +33,10 @@ from ..engine.core import sanitize
 __all__ = [
     "make_sanitize_udf",
     "make_span_array_udf",
+    "arrow_span_kernel",
     "sanitize_spans_arrow",
     "SPAN_TYPE",
     "SPANS_TYPE",
-    "SAFE_RESULT_TYPE",
 ]
 
 SPAN_TYPE = T.StructType(
@@ -48,61 +49,22 @@ SPAN_TYPE = T.StructType(
 )
 SPANS_TYPE = T.ArrayType(SPAN_TYPE)
 
-# spans per chunk row of the chunked sanitize plan (pipeline.job)
-CHUNK_SPANS = 256
 
-# on_error != "raise" result: sanitized text + explicit error flag, so a
-# poison row is visible downstream (quarantine / lineage counters) instead
-# of silently emitting unsanitized bytes (ADVICE r01).
-SAFE_RESULT_TYPE = T.StructType(
-    [
-        T.StructField("text", T.StringType()),
-        T.StructField("err", T.BooleanType()),
-    ]
-)
-
-
-def make_sanitize_udf(settings=None, memoize: int = 0, on_error: str = "raise"):
+def make_sanitize_udf(settings=None):
     """Scalar pandas UDF: sanitize a batch of HTML fragments.
 
     ``settings`` may be a Settings instance or a registered config name;
     it is captured in the closure and shipped once per executor (the
-    broadcast-by-closure pattern, SURVEY.md §1.2).
-
-    ``memoize``: when > 0, keep a per-worker bounded memo of
-    input-fragment -> output. Real web corpora repeat boilerplate spans
-    (nav bars, footers, templates) at enormous rates, and ``sanitize`` is a
-    pure function, so this is a deterministic cache, not an approximation.
-    Off by default so benchmarks measure the engine, not the corpus's
-    redundancy.
-
-    ``on_error``: poison-document policy for 100TB runs, where one
-    pathological fragment must not kill a 10^6-task job. Non-"raise" modes
-    return struct<text, err> so the failure is an explicit flag, never a
-    silent pass-through of unsanitized bytes:
-      - "raise" (default): propagate — correctness runs want loud failures;
-      - "keep":  pass the offending fragment through unsanitized with
-        err=true (route to quarantine / count in lineage downstream);
-      - "null":  null the text with err=true (drops the content, keeps the
-        span slot).
+    broadcast-by-closure pattern, SURVEY.md §1.2). A fragment the engine
+    cannot sanitize fails the task; the memo and the keep/null poison
+    policies live on the span-array kernels.
     """
-    if on_error not in ("raise", "keep", "null"):
-        raise ValueError(f"on_error must be raise|keep|null, got {on_error!r}")
-    kernel = _make_text_kernel(settings_for(settings), memoize, on_error)
-
-    if on_error != "raise":
-
-        @F.pandas_udf(SAFE_RESULT_TYPE)
-        def sanitize_batch_safe(texts: pd.Series) -> pd.DataFrame:
-            res = [(None, False) if t is None else kernel(t) for t in texts]
-            return pd.DataFrame(res, columns=["text", "err"])
-
-        return sanitize_batch_safe
+    settings_obj = settings_for(settings)
 
     @F.pandas_udf(T.StringType())
     def sanitize_batch(texts: pd.Series) -> pd.Series:
         # Executor-side: regexes compile lazily once per python worker.
-        out = [None if t is None else kernel(t)[0] for t in texts]
+        out = [None if t is None else sanitize(t, settings_obj) for t in texts]
         return pd.Series(out, dtype="object")
 
     return sanitize_batch
@@ -158,8 +120,8 @@ def _worker_cache(memo_key: str) -> dict:
 
 
 def _make_text_kernel(settings_obj, memoize: int, on_error: str):
-    """Per-fragment sanitize kernel shared by every UDF shape (scalar,
-    span-array pandas, span-array arrow): one place implements the memo
+    """Per-fragment sanitize kernel shared by the span-array shapes
+    (pandas UDF and Arrow kernel): one place implements the memo
     (per-worker bounded cache keyed by a deterministic config+policy
     fingerprint, ADVICE r02) and the poison policy (keep/null with an
     explicit error flag, never a silent pass-through). Returns
@@ -203,9 +165,16 @@ def make_span_array_udf(settings=None, memoize: int = 0, on_error: str = "raise"
     size distribution is tame; the chunked+salted plan wins under
     mega-document skew.
 
-    ``memoize``/``on_error`` mirror make_sanitize_udf (VERDICT r03 #8 —
-    the nested plan honors the same knobs instead of rejecting them);
-    keep/null are applied per span inside the array. Per-span error
+    ``memoize``: per-worker bounded memo of fragment -> output. Real web
+    corpora repeat boilerplate spans (nav bars, footers, templates) at
+    enormous rates, and ``sanitize`` is pure, so this is a deterministic
+    cache, not an approximation. Off by default so benchmarks measure the
+    engine, not the corpus's redundancy.
+
+    ``on_error``: poison-span policy, so one pathological fragment does
+    not kill a 10^6-task job: "raise" (default) propagates; "keep" passes
+    the fragment through unsanitized and "null" nulls its text, both
+    flagged as errors, never a silent pass-through. Per-span error
     FLAGS need the arrow path (sanitize_spans_arrow with_errors=True) —
     this UDF's output type is the spans array alone.
     """
@@ -246,30 +215,21 @@ def make_span_array_udf(settings=None, memoize: int = 0, on_error: str = "raise"
     return sanitize_spans_batch
 
 
-def sanitize_spans_arrow(
-    df, settings=None, memoize: int = 0, on_error: str = "raise",
-    with_errors: bool = False, lineage=None,
+def arrow_span_kernel(
+    schema, settings=None, memoize: int = 0, on_error: str = "raise",
+    with_errors: bool = False,
 ):
-    """Nested zero-extra-shuffle path via ``mapInArrow`` (SURVEY.md §2.10):
-    operates on pyarrow RecordBatches directly — the flattened struct
-    children are rebuilt column-wise (only the ``text`` child is touched),
-    skipping the per-row dict conversion the pandas span-array UDF pays.
-    Same semantics as make_span_array_udf; measurably faster per batch.
-    The chunked plan (pipeline.job.sanitize_chunks) runs it on
-    (doc_id, _chunk, spans) rows of at most CHUNK_SPANS spans.
+    """The span-array kernel over pyarrow RecordBatches (SURVEY.md §2.10):
+    the flattened struct children are rebuilt column-wise (only the
+    ``text`` child is touched), skipping the per-row dict conversion the
+    pandas span-array UDF pays. Same semantics as make_span_array_udf.
 
-    ``memoize``/``on_error`` mirror make_sanitize_udf (VERDICT r03 #8):
-    keep/null are applied per span. ``with_errors=True`` (requires a
-    non-"raise" policy) appends ``span_errors`` array<int>: the 0-based
-    positions of the row's poison spans (null for a null spans row).
-
-    ``lineage`` (pipeline.job.lineage_accumulator): each task with rows
-    adds ``part_id -> (n_spans, n_docs, text_bytes_out, n_media_spans,
-    n_errors)`` for its partition. An empty or null spans row counts as
-    one span; text_bytes_out counts characters, as Spark's ``length``.
-    n_docs is exact: on chunk rows, the ids of rows that may share their
-    doc (``_chunk > 0`` or a full first chunk) go through a set, so its
-    size is bounded by the partition's mega-doc chunks.
+    Returns ``(fix, out_schema)``: ``fix`` maps one batch of a frame with
+    Spark schema ``schema`` (a ``spans`` column among any others) to its
+    sanitized batch of ``out_schema``. ``memoize``/``on_error`` as in
+    make_span_array_udf. ``with_errors=True`` (requires a non-"raise"
+    policy) appends ``span_errors`` array<int>: the 0-based positions of
+    the row's poison spans (null for a null spans row).
     """
     import pyarrow as pa
 
@@ -281,92 +241,75 @@ def sanitize_spans_arrow(
             "'raise' a poison span fails the job, so the error column "
             "would be constant empty"
         )
-    settings_obj = settings_for(settings)
-    kernel = _make_text_kernel(settings_obj, memoize, on_error)
-    schema = df.schema
+    kernel = _make_text_kernel(settings_for(settings), memoize, on_error)
     if with_errors:
         schema = T.StructType(schema.fields + [
             T.StructField("span_errors", T.ArrayType(T.IntegerType()))])
 
-    def fix_batches(batches):
-        n_spans = n_docs = chars = media = errors = 0
-        shared = set()  # ids of docs that may own several rows here
-        for batch in batches:
-            names = batch.schema.names
-            idx = names.index("spans")
-            lst = batch.column(idx)
-            if isinstance(lst, pa.ChunkedArray):  # defensive; batches are flat
-                lst = lst.combine_chunks()
-            values = lst.values  # flattened StructArray (absolute offsets)
-            new_text = []
-            elem_err = []
-            for k, t in zip(values.field("kind").to_pylist(),
-                            values.field("text").to_pylist()):
-                if k == "text" and t is not None:
-                    clean, err = kernel(t)
-                else:
-                    clean, err = t, False
-                new_text.append(clean)
-                elem_err.append(err)
-                if k == "text":
-                    chars += len(clean or "")
-                elif k is not None:
-                    media += 1
-            # carry the element-level validity through the rebuild: without
-            # the mask a null span element would come back as a non-null
-            # struct of null fields (ADVICE r02), diverging from the input
-            # and from the pandas path
-            elem_mask = (
-                pa.compute.is_null(values) if values.null_count else None
-            )
-            new_values = pa.StructArray.from_arrays(
-                [
-                    values.field("kind"),
-                    pa.array(new_text, pa.string()),
-                    values.field("media_ref"),
-                    values.field("offset"),
-                ],
-                names=["kind", "text", "media_ref", "offset"],
-                mask=elem_mask,
-            )
-            null_mask = lst.is_null() if lst.null_count else None
-            new_list = pa.ListArray.from_arrays(
-                lst.offsets, new_values, mask=null_mask
-            )
-            arrays = [
-                new_list if i == idx else batch.column(i)
-                for i in range(batch.num_columns)
-            ]
-            out_names = list(names)
+    def fix(batch):
+        names = batch.schema.names
+        idx = names.index("spans")
+        lst = batch.column(idx)
+        if isinstance(lst, pa.ChunkedArray):  # defensive; batches are flat
+            lst = lst.combine_chunks()
+        values = lst.values  # flattened StructArray (absolute offsets)
+        new_text = []
+        elem_err = []
+        for k, t in zip(values.field("kind").to_pylist(),
+                        values.field("text").to_pylist()):
+            if k == "text" and t is not None:
+                clean, err = kernel(t)
+            else:
+                clean, err = t, False
+            new_text.append(clean)
+            elem_err.append(err)
+        # carry the element-level validity through the rebuild: without
+        # the mask a null span element would come back as a non-null
+        # struct of null fields (ADVICE r02), diverging from the input
+        # and from the pandas path
+        elem_mask = pa.compute.is_null(values) if values.null_count else None
+        new_values = pa.StructArray.from_arrays(
+            [
+                values.field("kind"),
+                pa.array(new_text, pa.string()),
+                values.field("media_ref"),
+                values.field("offset"),
+            ],
+            names=["kind", "text", "media_ref", "offset"],
+            mask=elem_mask,
+        )
+        null_mask = lst.is_null() if lst.null_count else None
+        new_list = pa.ListArray.from_arrays(lst.offsets, new_values,
+                                            mask=null_mask)
+        arrays = [
+            new_list if i == idx else batch.column(i)
+            for i in range(batch.num_columns)
+        ]
+        out_names = list(names)
+        if with_errors:
             # row i owns flattened elements [offs[i], offs[i+1])
             offs = lst.offsets.to_pylist()
-            rows = range(batch.num_rows)
-            if with_errors:
-                valid = lst.is_valid().to_pylist()
-                errs = [[j - offs[i] for j in range(offs[i], offs[i + 1])
-                         if elem_err[j]] if valid[i] else None for i in rows]
-                arrays.append(pa.array(errs, pa.list_(pa.int32())))
-                out_names.append("span_errors")
-            errors += sum(elem_err)
-            n_spans += sum(max(offs[i + 1] - offs[i], 1) for i in rows)
-            if "_chunk" in names:
-                ids = batch.column(names.index("doc_id")).to_pylist()
-                chunk = batch.column(names.index("_chunk")).to_pylist()
-                for i in rows:
-                    if chunk[i] == 0 and offs[i + 1] - offs[i] < CHUNK_SPANS:
-                        n_docs += 1  # the doc's only row
-                    else:
-                        shared.add(ids[i])
-            else:
-                n_docs += batch.num_rows
-            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
-        if lineage is not None and n_spans:
-            from pyspark import TaskContext
+            valid = lst.is_valid().to_pylist()
+            errs = [[j - offs[i] for j in range(offs[i], offs[i + 1])
+                     if elem_err[j]] if valid[i] else None
+                    for i in range(batch.num_rows)]
+            arrays.append(pa.array(errs, pa.list_(pa.int32())))
+            out_names.append("span_errors")
+        return pa.RecordBatch.from_arrays(arrays, names=out_names)
 
-            lineage.add({TaskContext.get().partitionId(): (
-                n_spans, n_docs + len(shared), chars, media, errors)})
+    return fix, schema
 
-    return df.mapInArrow(fix_batches, schema)
+
+def sanitize_spans_arrow(
+    df, settings=None, memoize: int = 0, on_error: str = "raise",
+    with_errors: bool = False,
+):
+    """Nested zero-extra-shuffle path: :func:`arrow_span_kernel` over
+    ``df`` via ``mapInArrow``; measurably faster per batch than the
+    pandas span-array UDF."""
+    fix, schema = arrow_span_kernel(df.schema, settings, memoize, on_error,
+                                    with_errors)
+    return df.mapInArrow(lambda batches: map(fix, batches), schema)
 
 
 def register_sql_functions(spark, settings=None, name: str = "sanitize_html"):

@@ -9,9 +9,9 @@ Chunked path (default, skew-proof; sanitize_chunks + merge_chunks):
                                               salt_partitions(input); a
                                               mega-doc's chunks spread
                                               over all P tasks]
-      -> sanitize_spans_arrow                [the only Python hop: one
+      -> arrow_span_kernel                   [the only Python hop: one
                                               mapInArrow kernel, which
-                                              also counts lineage]
+                                              can also count lineage]
       -> groupBy(doc_id), chunk arrays       [SHUFFLE 2: one row per doc,
          flattened in _chunk order            span order restored]
 
@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.udfs import (
-    CHUNK_SPANS,
+    arrow_span_kernel,
     make_span_array_udf,
     sanitize_spans_arrow,
 )
@@ -49,6 +49,8 @@ __all__ = [
     "reassemble_spans",
     "lineage_metrics_nested",
 ]
+
+CHUNK_SPANS = 256  # spans per chunk row of the chunked plan
 
 
 def explode_spans(df: DataFrame) -> DataFrame:
@@ -113,9 +115,60 @@ class _ReplaceByKey(AccumulatorParam):
 
 
 def lineage_accumulator(spark: SparkSession):
-    """Accumulator for the kernel's lineage: part_id -> (n_spans, n_docs,
-    text_bytes_out, n_media_spans, n_errors) per partition with rows."""
+    """Accumulator for the chunk kernel's lineage: part_id -> (n_spans,
+    n_docs, text_bytes_out, n_media_spans, n_errors) per partition with
+    rows."""
     return spark.sparkContext.accumulator({}, _ReplaceByKey())
+
+
+def _counting(fix, lineage):
+    """``mapInArrow`` function running the chunk kernel ``fix`` on every
+    batch and adding the task's partition counters to ``lineage``.
+
+    An empty or null spans row counts as one span; null span elements
+    count toward n_spans only; text_bytes_out counts characters, as
+    Spark's ``length`` (the rules of :func:`lineage_metrics_nested`).
+    n_docs is exact: a row with ``_chunk`` 0 and fewer than CHUNK_SPANS
+    spans is its doc's only row and counts once; the ids of the other
+    rows go through a set, so the set holds only mega-doc ids.
+    """
+
+    def run(batches):
+        import pyarrow.compute as pc
+        from pyspark import TaskContext
+
+        def total(arr):
+            return pc.sum(arr).as_py() or 0
+
+        n_spans = n_docs = chars = media = errors = 0
+        shared = set()  # ids of docs with several chunk rows
+        for batch in batches:
+            out = fix(batch)
+            col = out.column
+            names = out.schema.names
+            spans = col(names.index("spans"))
+            lens = pc.fill_null(pc.list_value_length(spans), 0)
+            elems = pc.list_flatten(spans)
+            kind = pc.struct_field(elems, "kind")
+            is_text = pc.equal(kind, "text")
+            n_spans += total(pc.max_element_wise(lens, 1))
+            chars += total(pc.utf8_length(
+                pc.filter(pc.struct_field(elems, "text"), is_text)))
+            media += total(pc.invert(is_text))
+            if "span_errors" in names:
+                errors += total(pc.list_value_length(
+                    col(names.index("span_errors"))))
+            only = pc.and_(pc.equal(col(names.index("_chunk")), 0),
+                           pc.less(lens, CHUNK_SPANS))
+            n_docs += total(only)
+            shared.update(pc.filter(col(names.index("doc_id")),
+                                    pc.invert(only)).to_pylist())
+            yield out
+        if n_spans:
+            lineage.add({TaskContext.get().partitionId(): (
+                n_spans, n_docs + len(shared), chars, media, errors)})
+
+    return run
 
 
 def sanitize_chunks(
@@ -128,8 +181,10 @@ def sanitize_chunks(
     CHUNK_SPANS spans numbered by ``_chunk`` (a long); an empty or null
     array is one row that keeps it as it is. ``salt_buckets`` repartitions
     the rows by (doc_id, _chunk), spreading a mega-document over every
-    task. The Arrow kernel counts lineage into ``lineage`` and, under a
-    non-"raise" policy, adds each row's ``span_errors`` positions.
+    task. Under a non-"raise" policy the Arrow kernel adds each row's
+    ``span_errors`` positions. With ``lineage`` (a
+    :func:`lineage_accumulator`) each task also reports its partition's
+    counters; a retried or recomputed task replaces its earlier entry.
     """
     last = F.greatest(F.size("spans") - 1, F.lit(0))  # size(null) is null/-1
     chunk = F.explode(F.sequence(F.lit(0).cast("long"),
@@ -141,10 +196,11 @@ def sanitize_chunks(
     )
     if salt_buckets:
         chunks = chunks.repartition(salt_buckets, "doc_id", "_chunk")
-    return sanitize_spans_arrow(chunks, settings, memoize=memoize,
-                                on_error=on_error,
-                                with_errors=on_error != "raise",
-                                lineage=lineage)
+    fix, schema = arrow_span_kernel(chunks.schema, settings, memoize,
+                                    on_error, with_errors=on_error != "raise")
+    if lineage is None:
+        return chunks.mapInArrow(lambda batches: map(fix, batches), schema)
+    return chunks.mapInArrow(_counting(fix, lineage), schema)
 
 
 def merge_chunks(chunks: DataFrame) -> DataFrame:

@@ -311,9 +311,11 @@ def _rows_and_lineage(out):
 
 def test_killed_worker_retry_matches_clean_run(tmp_path):
     """A Python worker killed inside the sanitize kernel (os._exit on
-    attempt 0 of one partition) under local[4,2] is retried; the retried
-    run's output rows and lineage rows equal a clean run's, and the
-    in-kernel lineage reports the retried partition once."""
+    attempt 0 of one partition) under local[4,2] is retried, and the
+    retried run's output rows and lineage rows equal a clean run's. (The
+    killed attempt sends no accumulator update, so this does not tell a
+    replace-by-partition merge from an additive one; test_lineage_metrics
+    checks that with a second action on the same frame.)"""
     import subprocess
     import sys
 

@@ -72,7 +72,7 @@ def test_on_error_raise_default(spark, poison, doc):
 
 def test_on_error_rejects_bad_value():
     with pytest.raises(ValueError):
-        udfs.make_sanitize_udf(on_error="ignore")
+        udfs.make_span_array_udf(on_error="ignore")
 
 
 def test_auto_plan_selection(spark):

@@ -456,11 +456,18 @@ class TestWorkerMemoKeying:
             udfs._worker_memo.clear()
 
     def test_memoized_udf_still_correct_through_spark(self, spark):
-        from html_sanitizer_spark.functions.udfs import make_sanitize_udf
-
-        udf = make_sanitize_udf(None, memoize=100)
-        df = spark.createDataFrame(
-            [("<b>x</b>",)] * 10 + [("<i>y</i>",)] * 10, ["html"]
+        from html_sanitizer_spark.functions.udfs import (
+            SPANS_TYPE,
+            make_span_array_udf,
         )
-        got = {r["clean"] for r in df.select(udf("html").alias("clean")).collect()}
+        from pyspark.sql import types as T
+
+        udf = make_span_array_udf(None, memoize=100)
+        schema = T.StructType([T.StructField("spans", SPANS_TYPE)])
+        df = spark.createDataFrame(
+            [([("text", "<b>x</b>", None, 0)],)] * 10
+            + [([("text", "<i>y</i>", None, 0)],)] * 10, schema
+        )
+        got = {r["clean"][0]["text"]
+               for r in df.select(udf("spans").alias("clean")).collect()}
         assert got == {"<strong>x</strong>", "<em>y</em>"}
